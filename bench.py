@@ -6,6 +6,9 @@ Prints ONE JSON line:
    "queries_steady": {name: sec, ...}, "value_steady": <sec>,
    "sf": <scale factor>}
 
+A failed query keeps its time-to-failure in ``queries``, has null in
+``queries_steady`` and is named in ``errors`` (see ``time_queries``).
+
 Each query is materialized through the noop sink (full column
 evaluation, no driver collect) so timings reflect the whole plan.
 Queries come straight from the declared catalog — the bench surface
@@ -39,8 +42,9 @@ import os
 import statistics
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from kissmetrics_to_database_spark.session import cache_tables, get_spark  # noqa: E402
 
@@ -493,6 +497,65 @@ def emit_json_line(obj: dict, fd: int) -> str:
     return line
 
 
+def time_queries(names: list[str], run) -> dict:
+    """Time ``run(name)`` for each query: once for ``queries``, then
+    the median of 3 more runs for ``queries_steady``.
+
+    One failing query must not destroy the whole run's output (r14;
+    the contract is ONE stdout JSON line — a mid-run crash used to
+    leave nothing to parse, the exact failure mode the r12 PERF
+    comparison died of). A failed query still records its
+    time-to-failure in ``queries`` (entries are never removed) and
+    its error in the additive ``errors`` field. It has no steady
+    time: ``queries_steady`` holds null for it and ``value_steady``
+    leaves it out, so a crash never reads as a timing.
+    """
+    timings: dict[str, float] = {}
+    steady: dict[str, float | None] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        print(f"bench: {name}", file=sys.stderr, flush=True)
+        t0 = time.perf_counter()
+        try:
+            run(name)
+        except Exception as e:  # noqa: BLE001 — record, keep measuring
+            timings[name] = round(time.perf_counter() - t0, 3)
+            steady[name] = None
+            errors[name] = f"{type(e).__name__}: {str(e)[:300]}"
+            print(f"bench: {name} FAILED: {errors[name]}",
+                  file=sys.stderr, flush=True)
+            continue
+        timings[name] = round(time.perf_counter() - t0, 3)
+        reruns = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            run(name)
+            reruns.append(time.perf_counter() - t0)
+        steady[name] = round(statistics.median(reruns), 3)
+        # stream each query's numbers as JSONL to stderr so a killed
+        # run is salvageable (the final stdout JSON is unchanged)
+        print(
+            json.dumps(
+                {"q": name, "first": timings[name], "steady": steady[name]}
+            ),
+            file=sys.stderr,
+            flush=True,
+        )
+
+    out = {
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "queries_steady": steady,
+        "value_steady": round(
+            sum(v for v in steady.values() if v is not None), 3
+        ),
+    }
+    if errors:
+        out["errors"] = errors
+    return out
+
+
 def main() -> None:
     # Reserve the REAL stdout for the one JSON result line and point
     # fd 1 at stderr for everything else — including the JVM, which
@@ -530,58 +593,16 @@ def main() -> None:
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     names = [n for n in HEADLINE if not only or n in only.split(",")]
 
-    timings: dict[str, float] = {}
-    steady: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in names:
-        print(f"bench: {name}", file=sys.stderr, flush=True)
-        fn = catalog.QUERIES[name]
-        # One failing query must not destroy the whole run's output
-        # (r14; the contract is ONE stdout JSON line — a mid-run crash
-        # used to leave nothing to parse, the exact failure mode the
-        # r12 PERF comparison died of). A failed query still records
-        # its time-to-failure so it appears in `queries` (entries are
-        # never removed), and the additive `errors` field names it.
-        t0 = time.perf_counter()
-        try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        except Exception as e:  # noqa: BLE001 — record, keep measuring
-            timings[name] = round(time.perf_counter() - t0, 3)
-            steady[name] = timings[name]
-            errors[name] = f"{type(e).__name__}: {str(e)[:300]}"
-            print(f"bench: {name} FAILED: {errors[name]}",
-                  file=sys.stderr, flush=True)
-            continue
-        timings[name] = round(time.perf_counter() - t0, 3)
-        reruns = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            reruns.append(time.perf_counter() - t0)
-        steady[name] = round(statistics.median(reruns), 3)
-        # stream each query's numbers as JSONL to stderr so a killed
-        # run is salvageable (the final stdout JSON is unchanged)
-        print(
-            json.dumps(
-                {"q": name, "first": timings[name], "steady": steady[name]}
-            ),
-            file=sys.stderr,
-            flush=True,
-        )
-
-    total = round(sum(timings.values()), 3)
     out = {
         "metric": "headline-suite wall seconds (noop sink, local)",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "queries_steady": steady,
-        "value_steady": round(sum(steady.values()), 3),
+        **time_queries(
+            names,
+            lambda name: catalog.QUERIES[name](spark, sf_dir)
+            .write.format("noop").mode("overwrite").save(),
+        ),
         "sf": sf,
         "warmup_s": warmup_s,
     }
-    if errors:
-        out["errors"] = errors
     if not only:  # the fixed-cost tiers only belong to full runs
         out["trainers"] = bench_trainers(spark, sf_dir)
         out["layout"] = bench_layout(spark, sf_dir)

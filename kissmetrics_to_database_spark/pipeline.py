@@ -2,17 +2,27 @@
 restated as one declarative flow (SURVEY.md §3.1).
 
   discover new files (natural order, after watermark)
-  → one multi-file NDJSON scan (+ repair/quarantine)
+  → one multi-file NDJSON scan: each line parsed once, the repair
+    pass only for lines whose parse failed, the rest quarantined
   → per-row transform (sanitize, _n null-out, _t format, md5hash,
     created_at)
-  → schema union vs. the existing lake table
-  → lake append (+ optional exact dedup)
+  → optional exact dedup on md5hash
+  → ONE materialization: the transformed batch is persisted and
+    counted; the lake append and the identity step read that cache
+  → lake append (schema union vs. the existing lake on read)
   → incremental identity closure from the new batch's alias pairs
   → advance watermark (only after the writes committed)
 
-Everything before the writes is ONE Catalyst plan — scan, repair,
-projection, fingerprint fuse into a single whole-stage-codegen pass
-over the input files.
+Past the bounded schema-inference sample, the input files are scanned
+and parsed once per run. Where each ``PipelineResult`` count comes
+from:
+
+- ``n_rows``: the count that materializes the persisted batch;
+- ``n_repaired`` and ``n_quarantined``: an ``Observation`` on the
+  parse (``json_repair``), filled by that same job. A batch with no
+  good row is the one exception: its quarantined lines are counted by
+  a scan of their own (see ``_run_locked``);
+- ``n_identity_members``: a count of the staged identity map.
 """
 
 from __future__ import annotations
@@ -22,13 +32,12 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from kissmetrics_to_database_spark.functions import events_transform
 from kissmetrics_to_database_spark.operators import identity
 from kissmetrics_to_database_spark.sources import ndjson
-from kissmetrics_to_database_spark.sources.json_repair import read_ndjson_with_repair
+from kissmetrics_to_database_spark.sources.json_repair import _parse_observed
 from kissmetrics_to_database_spark.sources.lock import PipelineLock
 
 
@@ -101,24 +110,34 @@ def _run_locked(
     if not files:
         return PipelineResult()
 
-    lines = spark.read.text(files)
-    good, quarantined = read_ndjson_with_repair(spark, lines)
-    # one scan+repair pass feeds counts, the write, and identity
-    # extraction — without the persist each action re-reads and
-    # re-parses every source file
-    good = good.persist()
+    # One scan feeds everything. Parsing runs once per line and the
+    # repair only for lines whose parse failed (json_repair); the
+    # observation counts repaired and quarantined lines in that same
+    # pass, so no job re-reads the files just to count them.
+    parse_counts = Observation("json_repair")
+    good, quarantined = _parse_observed(spark, spark.read.text(files), parse_counts)
     transformed = events_transform.transform_events(
         good.drop("was_repaired"), fixed_date=fixed_date
     )
     if dedup_on_fingerprint:
         transformed = transformed.dropDuplicates(["md5hash"])
     transformed = transformed.persist()
-
-    n_rows = transformed.count()
-    n_repaired = good.where(F.col("was_repaired")).count()
-    n_quarantined = quarantined.count()
-
     try:
+        # The one materialization: this count builds the cache that
+        # the lake write and the identity step then read, and fills
+        # the observation on the way.
+        n_rows = transformed.count()
+        if n_rows:
+            counts = parse_counts.get
+            n_repaired = counts["n_repaired"]
+            n_quarantined = counts["n_quarantined"]
+        else:
+            # With no good row the dedup shuffle reads nothing, and
+            # AQE then drops the observed subtree from the plan, so
+            # the observation never fills. No good row means no
+            # repaired one; the quarantined lines get their own count.
+            n_repaired, n_quarantined = 0, quarantined.count()
+
         transformed.write.mode("append").parquet(str(Path(lake_dir) / "events"))
         n_members = 0
         if process_identities and "_p" in transformed.columns:
@@ -145,7 +164,6 @@ def _run_locked(
         raise
     finally:
         transformed.unpersist()
-        good.unpersist()
 
     return PipelineResult(
         files=files,

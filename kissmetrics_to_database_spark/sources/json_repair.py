@@ -6,19 +6,30 @@ skips rows that still fail (reference: helpers.php:10-22
 ``json_decode_sanitize``; failure paths KissmetricsToDatabase.php:
 197-199, ProcessFile.php:34-36).
 
-Spark restatement, strictly layered so the hot path stays built-in:
-1. ``spark.read.json`` PERMISSIVE mode with a corrupt-record column —
-   well-formed rows never touch the repair logic;
-2. corrupt rows only: a ``regexp_replace`` repair pass (Java regex
-   supports the lookarounds the repair needs — this is a column
-   expression, not a UDF), then re-parse;
-3. rows that still fail are counted and quarantined, never dropped
-   silently.
+Spark restatement, one projection over the raw lines, all built-in
+column expressions (no UDF):
+1. every line is parsed once with ``from_json`` (PERMISSIVE, with a
+   corrupt-record field so "failed to parse" is distinguishable from
+   "parsed to all NULLs");
+2. only a line whose first parse failed reaches the repair: the
+   ``regexp_replace`` pass (Java regex supports the lookarounds it
+   needs) and the second ``from_json`` sit under a ``CASE WHEN``, so
+   clean lines never pay for them;
+3. lines that still fail are flagged ``quarantined`` — counted and
+   kept aside, never dropped silently.
+
+The flagged projection sits below a ``CollectMetrics`` node (an
+``observe``) that counts repaired and quarantined lines in the same
+pass. The node also keeps Catalyst from pushing the good/quarantined
+filters below the projection, which would copy ``from_json`` into the
+filter and parse every clean line twice.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import uuid
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -62,6 +73,29 @@ def read_ndjson_with_repair(
       only past the sample should pass ``schema`` explicitly — the
       schema_evolution module's union-schema op computes it.
     """
+    # a unique name: two calls' results may meet in one plan, and
+    # Spark rejects two different observations under one name
+    return _parse_observed(
+        spark, path_or_df, f"json_repair_{uuid.uuid4().hex}", schema, sample_n
+    )
+
+
+def _parse_observed(
+    spark,
+    path_or_df,
+    observation: Observation | str,
+    schema: T.StructType | None = None,
+    sample_n: int = 10_000,
+) -> tuple[DataFrame, DataFrame]:
+    """The single parse behind :func:`read_ndjson_with_repair` and the
+    pipeline: ``(good, quarantined)`` as documented there, where the
+    shared flagged projection is observed as ``observation`` with two
+    metrics, ``n_repaired`` and ``n_quarantined``.
+
+    The metrics fill on the first action that runs the projection,
+    so a caller that materializes ``good`` once gets both counts
+    without scanning the input again.
+    """
     is_df = isinstance(path_or_df, DataFrame)
     lines = path_or_df if is_df else spark.read.text(str(path_or_df))
     lines = lines.filter(F.length(F.trim(F.col("value"))) > 0)
@@ -83,25 +117,38 @@ def read_ndjson_with_repair(
     # row like {} or {"a": null} must NOT be quarantined).
     aug = T.StructType(list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())])
     opts = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
-    parsed = lines.select(
-        F.col("value"),
-        F.from_json("value", aug, opts).alias("row"),
-        F.from_json(repair_json_col(F.col("value")), aug, opts).alias("repaired_row"),
+
+    def parsed_ok(c: str) -> Column:
+        return F.col(c).isNotNull() & F.col(f"{c}.{CORRUPT_COL}").isNull()
+
+    # Each step references the previous step's struct more than once;
+    # Catalyst does not inline a non-cheap expression into several
+    # uses, so from_json stays one evaluation per line.
+    first = lines.select("value", F.from_json("value", aug, opts).alias("first"))
+    ok = parsed_ok("first")
+    both = first.select(
+        "value",
+        "first",
+        F.when(~ok, F.from_json(repair_json_col(F.col("value")), aug, opts)).alias(
+            "second"
+        ),
     )
-    ok = F.col("row").isNotNull() & F.col(f"row.{CORRUPT_COL}").isNull()
-    ok_rep = (
-        F.col("repaired_row").isNotNull()
-        & F.col(f"repaired_row.{CORRUPT_COL}").isNull()
+    ok_rep = parsed_ok("second")
+    flagged = both.select(
+        "value",
+        F.when(ok, F.col("first")).otherwise(F.col("second")).alias("row"),
+        (~ok & ok_rep).alias("was_repaired"),
+        (~ok & ~ok_rep).alias("quarantined"),
+    ).observe(
+        observation,
+        F.count_if("was_repaired").alias("n_repaired"),
+        F.count_if("quarantined").alias("n_quarantined"),
     )
 
     good = (
-        parsed.where(ok | ok_rep)
-        .select(
-            F.when(ok, F.col("row")).otherwise(F.col("repaired_row")).alias("row"),
-            (~ok & ok_rep).alias("was_repaired"),
-        )
+        flagged.where(~F.col("quarantined"))
         .select("row.*", "was_repaired")
         .drop(CORRUPT_COL)
     )
-    quarantined = parsed.where(~ok & ~ok_rep).select("value")
+    quarantined = flagged.where(F.col("quarantined")).select("value")
     return good, quarantined

@@ -7,10 +7,11 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import bench  # noqa: E402
 
@@ -58,3 +59,36 @@ def test_emit_rejects_non_roundtripping():
     finally:
         os.close(w)
         os.close(r)
+
+
+def test_failed_query_has_no_steady_time():
+    calls = {"ok": 0}
+
+    def run(name):
+        if name == "bad":
+            raise RuntimeError("boom")
+        calls["ok"] += 1
+
+    out = bench.time_queries(["ok", "bad"], run)
+    assert calls["ok"] == 4  # one timed run + 3 steady reruns
+    assert set(out["queries"]) == {"ok", "bad"}
+    assert out["queries"]["bad"] >= 0
+    assert out["queries_steady"]["bad"] is None
+    assert out["queries_steady"]["ok"] is not None
+    assert out["value_steady"] == out["queries_steady"]["ok"]
+    assert out["value"] == round(sum(out["queries"].values()), 3)
+    assert out["errors"] == {"bad": "RuntimeError: boom"}
+    # null survives the stdout contract's JSON round-trip check
+    r, w = os.pipe()
+    try:
+        line = bench.emit_json_line(out, w)
+    finally:
+        os.close(w)
+        os.close(r)
+    assert json.loads(line)["queries_steady"]["bad"] is None
+
+
+def test_all_ok_run_has_no_errors_field():
+    out = bench.time_queries(["a"], lambda name: None)
+    assert "errors" not in out
+    assert out["value_steady"] == out["queries_steady"]["a"]

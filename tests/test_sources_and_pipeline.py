@@ -4,13 +4,20 @@ discovery, incremental pipeline idempotency, schema evolution."""
 from __future__ import annotations
 
 import json
+import re
 
+import pytest
+from pyspark.sql import Observation
 from pyspark.sql import types as T
 
 from kissmetrics_to_database_spark import pipeline
+from kissmetrics_to_database_spark.functions import events_transform
 from kissmetrics_to_database_spark.operators import schema_evolution as se
 from kissmetrics_to_database_spark.sources import ndjson
-from kissmetrics_to_database_spark.sources.json_repair import read_ndjson_with_repair
+from kissmetrics_to_database_spark.sources.json_repair import (
+    _parse_observed,
+    read_ndjson_with_repair,
+)
 
 
 def test_natural_key_ordering():
@@ -139,6 +146,76 @@ def test_incremental_pipeline_idempotent(spark, tmp_path):
         for r in spark.read.parquet(str(lake / "identity_components")).collect()
     }
     assert comp == {"u1": "a1", "a1": "a1", "u3": "a1"}
+
+
+_MIXED_BATCH = [
+    '{"_p": "u1", "_p2": "a1", "_n": "signup", "_t": "1704067207"}',
+    '{"_p": "u2", "_n": "said "hi" there", "_t": "1704067300"}',  # repaired
+    '{"_p": "u3", "_n": "cut off',                                  # quarantined
+    "",
+    "   ",
+    "{}",
+    '{"_p": "u4", "_n": "", "_t": "1704067400"}',
+]
+
+
+def _case_depths(plan: str, token: str) -> list[int]:
+    """CASE WHEN nesting depth at each occurrence of ``token`` in a
+    plan's text."""
+    depth, out = 0, []
+    for m in re.finditer(r"CASE WHEN|\bEND\b|" + re.escape(token), plan):
+        if m.group() == "CASE WHEN":
+            depth += 1
+        elif m.group() == "END":
+            depth -= 1
+        else:
+            out.append(depth)
+    return out
+
+
+def test_pipeline_parse_runs_from_json_once_per_line(spark, tmp_path):
+    # The parse the pipeline runs: every line goes through from_json
+    # once, and the repair (regexp_replace + a second from_json) only
+    # under a CASE WHEN. Without the CollectMetrics barrier Catalyst
+    # pushes the quarantine filter below the projection and copies
+    # from_json into it.
+    f = tmp_path / "1.json"
+    f.write_text("\n".join(_MIXED_BATCH))
+    good, _ = _parse_observed(spark, spark.read.text([str(f)]), Observation())
+    transformed = events_transform.transform_events(
+        good.drop("was_repaired"), fixed_date="2024-06-01"
+    )
+    assert transformed.count() == 4
+    plan = transformed._jdf.queryExecution().executedPlan().toString()
+    from_json = _case_depths(plan, "from_json(")
+    assert sorted(from_json) == [0, 1], plan
+    assert _case_depths(plan, "regexp_replace(") == [1], plan
+
+
+@pytest.mark.parametrize("dedup", [False, True])
+@pytest.mark.parametrize(
+    "lines,want",
+    [
+        (_MIXED_BATCH, (4, 1, 1, 2)),
+        (["not json", "{broken", '"just a string'], (0, 0, 3, 0)),
+        (["", "  ", ""], (0, 0, 0, 0)),
+    ],
+    ids=["mixed", "all_garbage", "all_blank"],
+)
+def test_pipeline_counts_on_edge_batches(spark, tmp_path, lines, want, dedup):
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "1.json").write_text("\n".join(lines))
+    res = pipeline.run_incremental(
+        spark,
+        str(src),
+        str(tmp_path / "state"),
+        str(tmp_path / "lake"),
+        fixed_date="2024-06-01",
+        dedup_on_fingerprint=dedup,
+    )
+    got = (res.n_rows, res.n_repaired, res.n_quarantined, res.n_identity_members)
+    assert got == want
 
 
 def test_union_evolving_and_align(spark):
