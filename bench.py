@@ -8,6 +8,10 @@ Prints ONE JSON line:
 
 A failed query keeps its time-to-failure in ``queries``, has null in
 ``queries_steady`` and is named in ``errors`` (see ``time_queries``).
+The additive ``memo`` field gives each query's memo-registry hits and
+misses (``session.memo``) for its first call and its steady reruns; a
+query with steady hits is ``memo_backed``: its steady time includes
+serving a memoized result, not rebuilding it.
 
 Each query is materialized through the noop sink (full column
 evaluation, no driver collect) so timings reflect the whole plan.
@@ -46,7 +50,11 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from kissmetrics_to_database_spark.session import cache_tables, get_spark  # noqa: E402
+from kissmetrics_to_database_spark.session import (  # noqa: E402
+    cache_tables,
+    get_spark,
+    memo_counts,
+)
 
 # Headline set: scan-heavy agg, star joins (incl. the join-heavy
 # TPC-H Q2/Q9/Q18/Q21 so regressions in the expensive plans are
@@ -497,6 +505,16 @@ def emit_json_line(obj: dict, fd: int) -> str:
     return line
 
 
+def _memo_delta(before: dict, after: dict) -> dict[str, int]:
+    """Registry hits and misses, over all names, between two
+    ``memo_counts()`` snapshots."""
+    return {
+        kind: sum(c[kind] for c in after.values())
+        - sum(c[kind] for c in before.values())
+        for kind in ("hits", "misses")
+    }
+
+
 def time_queries(names: list[str], run) -> dict:
     """Time ``run(name)`` for each query: once for ``queries``, then
     the median of 3 more runs for ``queries_steady``.
@@ -509,12 +527,18 @@ def time_queries(names: list[str], run) -> dict:
     its error in the additive ``errors`` field. It has no steady
     time: ``queries_steady`` holds null for it and ``value_steady``
     leaves it out, so a crash never reads as a timing.
+
+    ``memo`` gives each query's memo-registry hits and misses for the
+    first call and summed over the steady reruns (null for a failed
+    query); steady hits flag the query ``memo_backed``.
     """
     timings: dict[str, float] = {}
     steady: dict[str, float | None] = {}
     errors: dict[str, str] = {}
+    memo: dict[str, dict] = {}
     for name in names:
         print(f"bench: {name}", file=sys.stderr, flush=True)
+        before = memo_counts()
         t0 = time.perf_counter()
         try:
             run(name)
@@ -522,16 +546,25 @@ def time_queries(names: list[str], run) -> dict:
             timings[name] = round(time.perf_counter() - t0, 3)
             steady[name] = None
             errors[name] = f"{type(e).__name__}: {str(e)[:300]}"
+            memo[name] = {"first": _memo_delta(before, memo_counts()),
+                          "steady": None, "memo_backed": False}
             print(f"bench: {name} FAILED: {errors[name]}",
                   file=sys.stderr, flush=True)
             continue
         timings[name] = round(time.perf_counter() - t0, 3)
+        after_first = memo_counts()
         reruns = []
         for _ in range(3):
             t0 = time.perf_counter()
             run(name)
             reruns.append(time.perf_counter() - t0)
         steady[name] = round(statistics.median(reruns), 3)
+        steady_memo = _memo_delta(after_first, memo_counts())
+        memo[name] = {
+            "first": _memo_delta(before, after_first),
+            "steady": steady_memo,
+            "memo_backed": steady_memo["hits"] > 0,
+        }
         # stream each query's numbers as JSONL to stderr so a killed
         # run is salvageable (the final stdout JSON is unchanged)
         print(
@@ -550,6 +583,7 @@ def time_queries(names: list[str], run) -> dict:
         "value_steady": round(
             sum(v for v in steady.values() if v is not None), 3
         ),
+        "memo": memo,
     }
     if errors:
         out["errors"] = errors

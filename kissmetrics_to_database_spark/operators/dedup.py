@@ -331,6 +331,11 @@ def jaccard_pairs(
     those pairs; otherwise all same-token pairs are scored (only safe
     at small scale). Scores are rounded to 6 decimals so cross-engine
     float summation order can't flip a comparison.
+
+    Precondition: every candidate pair has ``id_a < id_b``. The
+    candidates are scored as given, so a pair listed in both orders
+    is scored twice and a self-pair scores 1.0; the all-pairs path
+    emits only ``id_a < id_b``.
     """
     sizes = token_df.groupBy(id_col).agg(F.count("*").alias("n"))
     ta = token_df.select(F.col(id_col).alias("id_a"), "token")

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kissmetrics_to_database_spark.operators import dedup, identity, similarity, text
-from kissmetrics_to_database_spark.session import load_table
+from kissmetrics_to_database_spark.session import load_table, memo
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -91,20 +91,18 @@ def _alias_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Cross-query memo for expensive shared sub-plans (the identity
-# components feed four queries). Keyed by session+sf so repeated
-# driver invocations in one process reuse the persisted result;
-# separate processes just recompute — correctness is unaffected.
-_MEMO: dict = {}
-
-
 def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir, "components")
-    if key not in _MEMO:
-        _MEMO[key] = identity.connected_components(
+    """The identity components, persisted once per session and sf_dir
+    data: they feed four queries, so repeated driver invocations in one
+    process reuse them; separate processes just recompute."""
+    return memo(
+        spark,
+        sf_dir,
+        "components",
+        lambda: identity.connected_components(
             _alias_edges(spark, sf_dir)
-        ).persist()
-    return _MEMO[key]
+        ).persist(),
+    )
 
 
 # Oracle CTE snippets kept identical across queries that build on the

@@ -23,7 +23,7 @@ from kissmetrics_to_database_spark.operators import (
     text,
 )
 from kissmetrics_to_database_spark.plans.catalog import query
-from kissmetrics_to_database_spark.session import load_table
+from kissmetrics_to_database_spark.session import load_table, memo, memo_dir
 from kissmetrics_to_database_spark.sources import json_repair
 
 # ---------------------------------------------------------------------------
@@ -145,11 +145,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "seed")
 
 
-
-_ARTIFACTS: dict = {}
-
-
-def _shared_artifact(spark, name: str, key_extra, builder):
+def _shared_artifact(spark, name: str, sf_dir: str, builder):
     """Train-once/serve-many artifact, PERSISTED TO PARQUET (r9).
 
     The r8 memos held `.persist()`ed frames; at sf1.0 the committed
@@ -158,27 +154,16 @@ def _shared_artifact(spark, name: str, key_extra, builder):
     (VERDICT r8, What's wrong #3) — Spark's storage memory evicts
     cached blocks LRU under pressure and silently recomputes the full
     lineage. A written parquet file cannot be evicted: the builder
-    runs once per (session, name, key), consumers re-scan a skinny
-    columnar artifact — the exact shape a production pipeline uses
-    for its persisted near-dup index. Lives under the system tmpdir,
-    namespaced by applicationId so concurrent sessions can't
-    cross-read."""
-    key = (spark.sparkContext.applicationId, name, key_extra)
-    if key not in _ARTIFACTS:
-        import hashlib
-        import os
-        import tempfile
+    runs once per (session, sf_dir data, name), consumers re-scan a
+    skinny columnar artifact — the exact shape a production pipeline
+    uses for its persisted near-dup index. Lives in a ``memo_dir``."""
 
-        h = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-        path = os.path.join(
-            tempfile.gettempdir(),
-            "kmdb_artifacts",
-            spark.sparkContext.applicationId,
-            f"{name}_{h}",
-        )
+    def build():
+        path = memo_dir(spark, name, sf_dir)
         builder().write.mode("overwrite").parquet(path)
-        _ARTIFACTS[key] = path
-    return spark.read.parquet(_ARTIFACTS[key])
+        return path
+
+    return spark.read.parquet(memo(spark, sf_dir, name, build))
 
 
 def _lsh_pairs_cached(spark, sf_dir: str):
@@ -1041,21 +1026,18 @@ def _bitext_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BITEXT_HP: dict = {}
-
-
 def _bitext_hyperplanes(spark: SparkSession, sf_dir: str) -> list:
     """First ``b`` corpus vectors as hyperplanes, with ``b`` sized
     from the corpus count by the log-n rule (`_lsh_bits`) — the same
     computation the oracle's params CTE does.
 
-    Memoized per sf_dir (r14 optimization round, guide §1.2 — the
-    `_ivf_route_centroids` train-once/serve-many precedent): ten
-    ANN-route queries each paid a count job + a collect job to fetch
-    the identical deterministic b-row index parameter. The memo
-    cannot change results."""
-    key = sf_dir
-    if key not in _BITEXT_HP:
+    Memoized per session and sf_dir data (r14 optimization round,
+    guide §1.2 — the `_ivf_route_centroids` train-once/serve-many
+    precedent): ten ANN-route queries each paid a count job + a
+    collect job to fetch the identical deterministic b-row index
+    parameter. The memo cannot change results."""
+
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         b = _lsh_bits(emb.count())
         rows = (
@@ -1064,8 +1046,9 @@ def _bitext_hyperplanes(spark: SparkSession, sf_dir: str) -> list:
             .select("embedding")
             .collect()
         )
-        _BITEXT_HP[key] = [[float(x) for x in r[0]] for r in rows]
-    return _BITEXT_HP[key]
+        return [[float(x) for x in r[0]] for r in rows]
+
+    return memo(spark, sf_dir, "bitext_hyperplanes", build)
 
 
 @query(
@@ -3977,33 +3960,31 @@ def _pq_topk_oracle(
     )
 
 
-_PQ_ARTIFACTS: dict[tuple, list] = {}
-
-
 def _pq_codebooks_cached(spark, sf_dir: str, m=4, k=8, iters=2):
     """Train-once/serve-many for the PQ family (r8, classifier-memo
     precedent): pq_encode and pq_topk_adc share one trained codebook
-    set per sf_dir. Training is deterministic, so the memo cannot
-    change results — it removes the repeated Lloyd schedules a model
-    registry would remove in production."""
-    key = ("pq", sf_dir, m, k, iters)
-    if key not in _PQ_ARTIFACTS:
+    set per session and sf_dir data. Training is deterministic, so the
+    memo cannot change results — it removes the repeated Lloyd
+    schedules a model registry would remove in production."""
+
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
-        _PQ_ARTIFACTS[key] = similarity.pq_train_codebooks(
+        return similarity.pq_train_codebooks(
             emb, m=m, k_codes=k, iters=iters
         )
-    return _PQ_ARTIFACTS[key]
+
+    return memo(spark, sf_dir, "pq_codebooks", build, m, k, iters)
 
 
 def _ivfpq_codebooks_cached(spark, sf_dir: str, m=4, k=8, iters=2):
-    key = ("ivfpq", sf_dir, m, k, iters)
-    if key not in _PQ_ARTIFACTS:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         centroids = emb.where(F.col("vec_id") < 8)
-        _PQ_ARTIFACTS[key] = similarity.ivfpq_train_codebooks(
+        return similarity.ivfpq_train_codebooks(
             emb, centroids, m=m, k_codes=k, iters=iters
         )
-    return _PQ_ARTIFACTS[key]
+
+    return memo(spark, sf_dir, "ivfpq_codebooks", build, m, k, iters)
 
 
 @query("pq_topk_adc", _pq_topk_oracle(4, 16, 2, 5))
@@ -4595,19 +4576,17 @@ def q_domain_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return web.domain_quota_cap(parsed, cap=60).orderBy("registered_domain")
 
 
-_CLASSIFIER_WEIGHTS: dict[str, list[float]] = {}
-
-
 def _trained_classifier_weights(spark, sf_dir: str) -> list[float]:
     """Train-once/serve-many for the quality classifier (r8, the r6
     kmeans/PQ precedent): the three classifier queries (confusion,
     calibration bins, threshold sweep) share one trained artifact per
-    sf_dir instead of re-running identical 3-iteration GD three
-    times. Training is deterministic (integer micro-unit GD), so the
-    memo cannot change any result — it only removes repeated work,
-    exactly what a production pipeline does with a model registry."""
-    w = _CLASSIFIER_WEIGHTS.get(sf_dir)
-    if w is None:
+    session and sf_dir data instead of re-running identical
+    3-iteration GD three times. Training is deterministic (integer
+    micro-unit GD), so the memo cannot change any result — it only
+    removes repeated work, exactly what a production pipeline does
+    with a model registry."""
+
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         labeled = docs.withColumn(
             "y",
@@ -4615,11 +4594,11 @@ def _trained_classifier_weights(spark, sf_dir: str) -> list[float]:
                 F.split(F.lower(F.trim(F.col("text"))), r"\s+"), "spark"
             ).cast("double"),
         )
-        w = text.train_hashed_classifier(
+        return text.train_hashed_classifier(
             labeled, "y", buckets=4096, iters=3, lr=10.0
         )
-        _CLASSIFIER_WEIGHTS[sf_dir] = w
-    return w
+
+    return memo(spark, sf_dir, "classifier_weights", build)
 
 
 def _classifier_train_oracle(iters: int = 3, lr: float = 1.0) -> str:
@@ -8657,9 +8636,6 @@ def q_encoding_repair_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # EXT — lakehouse interop: Delta-protocol snapshot reads (r9)
 # ---------------------------------------------------------------------------
 
-_DELTA_FIX: dict = {}
-
-
 def _delta_fixture(spark, sf_dir: str) -> str:
     """Build (once per session) a REAL Delta table from the documents
     table: three commits with a remove + a checkpoint in the middle,
@@ -8670,10 +8646,8 @@ def _delta_fixture(spark, sf_dir: str) -> str:
     0's files and adds doc_id%3==2. Partitioned by lang — read-back
     must reconstruct the column from partitionValues, not the data
     files."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DELTA_FIX:
-        import tempfile
 
+    def build():
         from pyspark.sql import types as T
 
         from kissmetrics_to_database_spark.sources import deltalog as dl
@@ -8690,7 +8664,7 @@ def _delta_fixture(spark, sf_dir: str) -> str:
                 T.StructField("lang", T.StringType()),
             ]
         )
-        path = tempfile.mkdtemp(prefix="kmdb_delta_") + "/documents_delta"
+        path = memo_dir(spark, "delta_fixture", sf_dir) + "/documents_delta"
         w = dl.DeltaFixtureWriter(path, schema, partition_columns=["lang"])
         added0 = w.commit(pdf[pdf.doc_id % 3 == 0])
         w.commit(pdf[pdf.doc_id % 3 == 1])
@@ -8700,8 +8674,9 @@ def _delta_fixture(spark, sf_dir: str) -> str:
             remove_paths=added0,
             operation="MERGE",
         )
-        _DELTA_FIX[key] = path
-    return _DELTA_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "delta_fixture", build)
 
 
 @query(
@@ -8829,19 +8804,14 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "day", "value_band")
 
 
-_DELTA_CM_FIX: dict = {}
-
-
 def _delta_cm_fixture(spark, sf_dir: str) -> str:
     """Column-mapped Delta table (r10, VERDICT r9 #4): mode=name,
     physical col-XXXX parquet names, reader-version-2 protocol,
     lang-partitioned with physical-name partitionValues keys — two
     commits plus a MERGE remove so the rename path composes with
     replay."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DELTA_CM_FIX:
-        import tempfile
 
+    def build():
         from pyspark.sql import types as T
 
         from kissmetrics_to_database_spark.sources import deltalog as dl
@@ -8858,7 +8828,7 @@ def _delta_cm_fixture(spark, sf_dir: str) -> str:
                 T.StructField("lang", T.StringType()),
             ]
         )
-        path = tempfile.mkdtemp(prefix="kmdb_delta_cm_") + "/docs_cm"
+        path = memo_dir(spark, "delta_cm_fixture", sf_dir) + "/docs_cm"
         w = dl.DeltaFixtureWriter(
             path,
             schema,
@@ -8871,8 +8841,9 @@ def _delta_cm_fixture(spark, sf_dir: str) -> str:
             remove_paths=added0,
             operation="MERGE",
         )
-        _DELTA_CM_FIX[key] = path
-    return _DELTA_CM_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "delta_cm_fixture", build)
 
 
 @query(
@@ -8911,19 +8882,14 @@ def q_delta_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DELTA_DV_FIX: dict = {}
-
-
 def _delta_dv_fixture(spark, sf_dir: str) -> str:
     """Deletion-vector fixture (r10): two data commits (doc_id parity
     slices), then DV commits marking every doc_id % 5 == 0 row
     deleted by ROW INDEX — one Z85-uuid .bin vector and one inline
     Z85 vector, so both storage types decode through the from-spec
     Roaring64 codec."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DELTA_DV_FIX:
-        import tempfile
 
+    def build():
         from pyspark.sql import types as T
 
         from kissmetrics_to_database_spark.sources import deltalog as dl
@@ -8940,7 +8906,7 @@ def _delta_dv_fixture(spark, sf_dir: str) -> str:
                 T.StructField("lang", T.StringType()),
             ]
         )
-        path = tempfile.mkdtemp(prefix="kmdb_delta_dv_") + "/docs_dv"
+        path = memo_dir(spark, "delta_dv_fixture", sf_dir) + "/docs_dv"
         w = dl.DeltaFixtureWriter(path, schema, deletion_vectors=True)
         rels, slices = [], []
         for m, storage in ((0, "u"), (1, "i")):
@@ -8954,8 +8920,9 @@ def _delta_dv_fixture(spark, sf_dir: str) -> str:
             ]
             if pos:
                 w.dv_delete(rel, pos, storage=storage)
-        _DELTA_DV_FIX[key] = path
-    return _DELTA_DV_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "delta_dv_fixture", build)
 
 
 @query(
@@ -9145,9 +9112,6 @@ def q_delta_dv_delete_native(
     )
 
 
-_ICEBERG_FIX: dict = {}
-
-
 def _iceberg_fixture(spark, sf_dir: str) -> str:
     """Iceberg twin of `_delta_fixture`: three snapshots over the
     documents table — append doc_id%3==0 (snapshot 1000), append
@@ -9156,10 +9120,8 @@ def _iceberg_fixture(spark, sf_dir: str) -> str:
     replay, and snapshot-id time travel all get exercised through
     REAL Avro manifest bytes (functions/avroc.py, from the Avro
     spec)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ICEBERG_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import iceberg as ib
 
         pdf = (
@@ -9172,7 +9134,7 @@ def _iceberg_fixture(spark, sf_dir: str) -> str:
             {"id": 2, "name": "source", "required": False, "type": "string"},
             {"id": 3, "name": "lang", "required": False, "type": "string"},
         ]
-        path = tempfile.mkdtemp(prefix="kmdb_iceberg_") + "/documents_ib"
+        path = memo_dir(spark, "iceberg_fixture", sf_dir) + "/documents_ib"
         w = ib.IcebergFixtureWriter(path, fields)
         added0 = w.commit(pdf[pdf.doc_id % 3 == 0])
         w.commit(pdf[pdf.doc_id % 3 == 1])
@@ -9181,8 +9143,9 @@ def _iceberg_fixture(spark, sf_dir: str) -> str:
             remove_paths=added0,
             operation="overwrite",
         )
-        _ICEBERG_FIX[key] = path
-    return _ICEBERG_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "iceberg_fixture", build)
 
 
 @query(
@@ -9268,19 +9231,14 @@ def q_iceberg_snapshot_by_source(
     )
 
 
-_ICEBERG_MOR_FIX: dict = {}
-
-
 def _iceberg_mor_fixture(spark, sf_dir: str) -> str:
     """v2 merge-on-read fixture (r10, VERDICT r9 #3): three data
     commits (doc_id mod 3 slices, one file each), then one positional
     DELETE commit removing every doc_id % 7 == 0 row by (file, row
     position) — real delete-manifest + delete-parquet bytes for the
     reader's anti-join path."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ICEBERG_MOR_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import iceberg as ib
 
         pdf = (
@@ -9293,7 +9251,7 @@ def _iceberg_mor_fixture(spark, sf_dir: str) -> str:
             {"id": 2, "name": "source", "required": False, "type": "string"},
             {"id": 3, "name": "lang", "required": False, "type": "string"},
         ]
-        path = tempfile.mkdtemp(prefix="kmdb_iceberg_mor_") + "/docs_mor"
+        path = memo_dir(spark, "iceberg_mor_fixture", sf_dir) + "/docs_mor"
         w = ib.IcebergFixtureWriter(path, fields)
         deletes = []
         for m in range(3):
@@ -9305,8 +9263,9 @@ def _iceberg_mor_fixture(spark, sf_dir: str) -> str:
                 if d % 7 == 0
             )
         w.delete_commit(deletes)
-        _ICEBERG_MOR_FIX[key] = path
-    return _ICEBERG_MOR_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "iceberg_mor_fixture", build)
 
 
 @query(
@@ -9344,19 +9303,15 @@ def q_iceberg_mor_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_EQ_FIX: dict = {}
-
-
 def _iceberg_eq_fixture(spark, sf_dir: str) -> str:
     """Equality-delete fixture (r10): commit the even-doc_id half
     (seq 1), EQUALITY-delete lang='de' (seq 2 — applies only to seq
     < 2), then commit the odd half (seq 3) — so the surviving set is
     (even AND lang<>'de') OR odd, exercising sequence scoping through
     real manifest bytes."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ICEBERG_EQ_FIX:
+
+    def build():
         import pandas as pd
-        import tempfile
 
         from kissmetrics_to_database_spark.sources import iceberg as ib
 
@@ -9370,7 +9325,7 @@ def _iceberg_eq_fixture(spark, sf_dir: str) -> str:
             {"id": 2, "name": "source", "required": False, "type": "string"},
             {"id": 3, "name": "lang", "required": False, "type": "string"},
         ]
-        path = tempfile.mkdtemp(prefix="kmdb_iceberg_eq_") + "/docs_eq"
+        path = memo_dir(spark, "iceberg_eq_fixture", sf_dir) + "/docs_eq"
         # production-writer shape (r11, VERDICT r10 #2): ADDED entries
         # carry null sequence numbers, inherited from the manifest list
         w = ib.IcebergFixtureWriter(
@@ -9381,8 +9336,9 @@ def _iceberg_eq_fixture(spark, sf_dir: str) -> str:
             pd.DataFrame({"lang": ["de"]}), field_ids=[3]
         )
         w.commit(pdf[pdf.doc_id % 2 == 1].reset_index(drop=True))
-        _ICEBERG_EQ_FIX[key] = path
-    return _ICEBERG_EQ_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "iceberg_eq_fixture", build)
 
 
 @query(
@@ -9538,17 +9494,13 @@ def q_hll_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_AVRO_FIX: dict = {}
-
-
 def _avro_fixture(spark, sf_dir: str) -> str:
     """Write the documents table (doc_id, source, lang) as 8 REAL
     Avro container shards (functions/avroc.py, codec null) once per
     session — the interchange-format ingest fixture."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _AVRO_FIX:
+
+    def build():
         import os
-        import tempfile
 
         from kissmetrics_to_database_spark.functions import avroc
 
@@ -9566,7 +9518,7 @@ def _avro_fixture(spark, sf_dir: str) -> str:
                 {"name": "lang", "type": ["null", "string"]},
             ],
         }
-        path = tempfile.mkdtemp(prefix="kmdb_avro_")
+        path = memo_dir(spark, "avro_fixture", sf_dir)
         for shard in range(8):
             sub = pdf[pdf.doc_id % 8 == shard]
             recs = sub.to_dict("records")
@@ -9574,8 +9526,9 @@ def _avro_fixture(spark, sf_dir: str) -> str:
                 os.path.join(path, f"part-{shard:05d}.avro"), "wb"
             ) as f:
                 f.write(avroc.write_container(schema, recs))
-        _AVRO_FIX[key] = path
-    return _AVRO_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "avro_fixture", build)
 
 
 @query(
@@ -10700,9 +10653,6 @@ def q_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r11: Delta WRITER roundtrip + CDF tail (VERDICT r10 #5/#6)
 # ---------------------------------------------------------------------------
 
-_DELTA_WRITER_FIX: dict = {}
-
-
 def _delta_writer_fixture(spark, sf_dir: str) -> str:
     """Production write path (r11, VERDICT r10 #6): commit the
     documents slice through ``write_delta`` — the DISTRIBUTED
@@ -10711,16 +10661,14 @@ def _delta_writer_fixture(spark, sf_dir: str) -> str:
     protocol bytes our sink emitted: v0 protocol/metaData, Hive-style
     partition dirs with authoritative partitionValues, per-file add
     actions."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DELTA_WRITER_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import deltalog as dl
 
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "lang"
         )
-        path = tempfile.mkdtemp(prefix="kmdb_delta_w_") + "/docs_w"
+        path = memo_dir(spark, "delta_writer_fixture", sf_dir) + "/docs_w"
         dl.write_delta(
             docs.where(F.col("doc_id") % 2 == 0),
             path,
@@ -10731,8 +10679,9 @@ def _delta_writer_fixture(spark, sf_dir: str) -> str:
             path,
             partition_columns=["lang"],
         )
-        _DELTA_WRITER_FIX[key] = path
-    return _DELTA_WRITER_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "delta_writer_fixture", build)
 
 
 @query(
@@ -10771,19 +10720,14 @@ def q_delta_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DELTA_CDF_FIX: dict = {}
-
-
 def _delta_cdf_fixture(spark, sf_dir: str) -> str:
     """CDF-bearing commit log (r11, VERDICT r10 #5): v0 appends every
     document; v1 is a DELETE of the lang='de' rows carried as
     _change_data rows (change type 'delete') plus the dataChange=true
     file swap — the shape a MERGE/DELETE leaves when
     delta.enableChangeDataFeed is on."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DELTA_CDF_FIX:
-        import tempfile
 
+    def build():
         from pyspark.sql import types as T
 
         from kissmetrics_to_database_spark.sources import deltalog as dl
@@ -10800,7 +10744,7 @@ def _delta_cdf_fixture(spark, sf_dir: str) -> str:
                 T.StructField("lang", T.StringType()),
             ]
         )
-        path = tempfile.mkdtemp(prefix="kmdb_delta_cdf_") + "/docs_cdf"
+        path = memo_dir(spark, "delta_cdf_fixture", sf_dir) + "/docs_cdf"
         w = dl.DeltaFixtureWriter(path, schema)
         added = w.commit(pdf)
         gone = pdf[pdf.lang == "de"].reset_index(drop=True)
@@ -10811,8 +10755,9 @@ def _delta_cdf_fixture(spark, sf_dir: str) -> str:
             add_pdf=pdf[pdf.lang != "de"].reset_index(drop=True),
             operation="DELETE",
         )
-        _DELTA_CDF_FIX[key] = path
-    return _DELTA_CDF_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "delta_cdf_fixture", build)
 
 
 @query(
@@ -10879,9 +10824,6 @@ def q_delta_cdf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the generator choice is evidence, not inference.
 # ---------------------------------------------------------------------------
 
-_IVF_ROUTE_CENTROIDS: dict[tuple, DataFrame] = {}
-
-
 def _ivf_cells(n: int) -> int:
     """K sizing for the two-sided IVF route: K = 2^b with the SAME
     log-n bit rule as `_lsh_bits`, so cells hold the same
@@ -10897,24 +10839,23 @@ def _ivf_route_centroids(
     """Train-once/serve-many centroids for the IVF candidate routes
     (the _pq_codebooks_cached precedent): one kmeans_train_centroids
     (iters=2 — the exact Lloyd schedule the shared SQL replays) per
-    (sf_dir, k), shared across the IVF-route queries. The one-sided
-    decontamination route keeps k=8 (its cost |eval|·n/K is LINEAR
-    in the corpus — K there is a recall knob, and k=8 shares the
-    kmeans family's artifact); the two-sided bitext route sizes
+    (session, sf_dir data, k), shared across the IVF-route queries.
+    The one-sided decontamination route keeps k=8 (its cost |eval|·n/K
+    is LINEAR in the corpus — K there is a recall knob, and k=8 shares
+    the kmeans family's artifact); the two-sided bitext route sizes
     K = _ivf_cells(n) log-n. Training is deterministic, so the memo
     cannot change results."""
-    key = (sf_dir, int(k))
-    if key not in _IVF_ROUTE_CENTROIDS:
+
+    def build():
         # training cost is n×K×iters centroid scorings — repartition
         # so it runs at cluster parallelism regardless of the input
         # file layout (the testdata ships one row group per table)
         emb = load_table(spark, sf_dir, "embeddings").repartition(
             spark.sparkContext.defaultParallelism
         )
-        _IVF_ROUTE_CENTROIDS[key] = similarity.kmeans_train_centroids(
-            emb, k=int(k), iters=2
-        )
-    return _IVF_ROUTE_CENTROIDS[key]
+        return similarity.kmeans_train_centroids(emb, k=int(k), iters=2)
+
+    return memo(spark, sf_dir, "ivf_route_centroids", build, int(k))
 
 
 # Parameterized Lloyd replay for the log-n-K bitext route: the SAME
@@ -11290,24 +11231,19 @@ def q_bitext_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("tgt_lang")
 
 
-_DELTA_OPT_FIX: dict = {}
-
-
 def _delta_optimize_fixture(spark, sf_dir: str) -> str:
     """OPTIMIZE roundtrip fixture (r11): two write_delta appends
     (even doc_ids, then odd) followed by one DISTRIBUTED
     optimize_delta — the dataChange=false bin-pack rewrite — so the
     read-back proves compaction changed bytes but not rows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DELTA_OPT_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import deltalog as dl
 
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "lang"
         )
-        path = tempfile.mkdtemp(prefix="kmdb_delta_opt_") + "/docs_opt"
+        path = memo_dir(spark, "delta_optimize_fixture", sf_dir) + "/docs_opt"
         dl.write_delta(docs.where(F.col("doc_id") % 2 == 0), path)
         dl.write_delta(docs.where(F.col("doc_id") % 2 == 1), path)
         n_before = len(dl.snapshot_state(path)["files"])
@@ -11315,8 +11251,9 @@ def _delta_optimize_fixture(spark, sf_dir: str) -> str:
         st = dl.snapshot_state(path)
         assert len(st["files"]) < n_before, "OPTIMIZE did not compact"
         assert all(a["dataChange"] is False for a in st["files"])
-        _DELTA_OPT_FIX[key] = path
-    return _DELTA_OPT_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "delta_optimize_fixture", build)
 
 
 @query(
@@ -11399,9 +11336,6 @@ def q_iceberg_optimize_roundtrip(
     )
 
 
-_ICEBERG_WRITER_FIX: dict = {}
-
-
 def _iceberg_writer_fixture(spark, sf_dir: str) -> str:
     """Production Iceberg write path (r11): commit the documents
     slice through ``write_iceberg`` — the DISTRIBUTED append-only v2
@@ -11409,20 +11343,19 @@ def _iceberg_writer_fixture(spark, sf_dir: str) -> str:
     read-back exercises real spec bytes our sink emitted: manifest
     REUSE across snapshots, null-sequence inheritance entries,
     sequence-numbered manifest lists."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ICEBERG_WRITER_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import iceberg as ib
 
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "lang"
         )
-        path = tempfile.mkdtemp(prefix="kmdb_iceberg_w_") + "/docs_w"
+        path = memo_dir(spark, "iceberg_writer_fixture", sf_dir) + "/docs_w"
         ib.write_iceberg(docs.where(F.col("doc_id") % 2 == 0), path)
         ib.write_iceberg(docs.where(F.col("doc_id") % 2 == 1), path)
-        _ICEBERG_WRITER_FIX[key] = path
-    return _ICEBERG_WRITER_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "iceberg_writer_fixture", build)
 
 
 @query(
@@ -11466,9 +11399,6 @@ def q_iceberg_writer_roundtrip(
 # Delta row-level DML: DELETE and MERGE as production writers (r11)
 # ---------------------------------------------------------------------------
 
-_DELTA_DML_FIX: dict = {}
-
-
 def _delta_dml_fixture(spark, sf_dir: str) -> dict:
     """Copy-on-write DML fixture (r11): a write_delta table built
     from the documents slice in two lang-partitioned commits, then
@@ -11476,16 +11406,14 @@ def _delta_dml_fixture(spark, sf_dir: str) -> dict:
     (source = the doc_id % 5 = 0 rows re-sourced to 'merged', plus
     brand-new doc_id = max+1..max+3 rows) — real protocol bytes for
     both DML paths, CDF commits included."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DELTA_DML_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import deltalog as dl
 
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "lang"
         )
-        path = tempfile.mkdtemp(prefix="kmdb_delta_dml_") + "/docs_dml"
+        path = memo_dir(spark, "delta_dml_fixture", sf_dir) + "/docs_dml"
         dl.write_delta(
             docs.where(F.col("doc_id") % 2 == 0),
             path,
@@ -11509,14 +11437,15 @@ def _delta_dml_fixture(spark, sf_dir: str) -> dict:
             {"source": "upper(lang)"},
             "doc_id % 11 = 0",
         )
-        _DELTA_DML_FIX[key] = {
+        return {
             "path": path,
             "v_pre": v_pre,
             "v_del": v_del,
             "v_mrg": v_mrg,
             "v_upd": v_upd,
         }
-    return _DELTA_DML_FIX[key]
+
+    return memo(spark, sf_dir, "delta_dml_fixture", build)
 
 
 def _read_cdf_rows(spark, path: str, version: int):
@@ -11712,9 +11641,6 @@ def q_delta_merge_dup_key_targets(
 # Hudi copy-on-write reader (r11): the third lakehouse format
 # ---------------------------------------------------------------------------
 
-_HUDI_FIX: dict = {}
-
-
 def _hudi_fixture(spark, sf_dir: str) -> dict:
     """Hudi CoW table from the documents slice (r11): insert every
     document partitioned by lang (one file group per lang), UPSERT
@@ -11723,10 +11649,8 @@ def _hudi_fixture(spark, sf_dir: str) -> dict:
     'en' partition (replacecommit — groups merged, old fileIds
     replaced). Returns the path plus the insert instant for time
     travel."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _HUDI_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import hudi
 
         pdf = (
@@ -11734,7 +11658,7 @@ def _hudi_fixture(spark, sf_dir: str) -> dict:
             .select("doc_id", "source", "lang")
             .toPandas()
         )
-        path = tempfile.mkdtemp(prefix="kmdb_hudi_") + "/docs_hudi"
+        path = memo_dir(spark, "hudi_fixture", sf_dir) + "/docs_hudi"
         w = hudi.HudiFixtureWriter(
             path, key_col="doc_id", partition_col="lang"
         )
@@ -11744,8 +11668,9 @@ def _hudi_fixture(spark, sf_dir: str) -> dict:
         w.upsert(up)
         w.cluster("en")
         w.pending("commit")  # inflight instant must stay invisible
-        _HUDI_FIX[key] = {"path": path, "i0": i0}
-    return _HUDI_FIX[key]
+        return {"path": path, "i0": i0}
+
+    return memo(spark, sf_dir, "hudi_fixture", build)
 
 
 @query(
@@ -11791,9 +11716,6 @@ def q_hudi_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HUDI_MOR_FIX: dict = {}
-
-
 def _hudi_mor_fixture(spark, sf_dir: str) -> dict:
     """Hudi MERGE_ON_READ table from the documents slice (r12,
     VERDICT r11 #3): insert every document partitioned by lang, LOG
@@ -11802,10 +11724,8 @@ def _hudi_mor_fixture(spark, sf_dir: str) -> dict:
     compaction and log one more upsert past it (doc_id % 7 = 1 among
     survivors → 'pending') — the read must merge base + both log
     generations while the compaction stays incomplete."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _HUDI_MOR_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import hudi
 
         pdf = (
@@ -11813,7 +11733,7 @@ def _hudi_mor_fixture(spark, sf_dir: str) -> dict:
             .select("doc_id", "source", "lang")
             .toPandas()
         )
-        path = tempfile.mkdtemp(prefix="kmdb_hudi_mor_") + "/docs_mor"
+        path = memo_dir(spark, "hudi_mor_fixture", sf_dir) + "/docs_mor"
         w = hudi.HudiMorFixtureWriter(
             path, key_col="doc_id", partition_col="lang"
         )
@@ -11826,8 +11746,9 @@ def _hudi_mor_fixture(spark, sf_dir: str) -> dict:
         up2 = pdf[(pdf.doc_id % 7 == 1) & (pdf.doc_id % 5 != 0)].copy()
         up2["source"] = "pending"
         w.delta_upsert(up2)
-        _HUDI_MOR_FIX[key] = {"path": path, "i0": i0, "i1": i1}
-    return _HUDI_MOR_FIX[key]
+        return {"path": path, "i0": i0, "i1": i1}
+
+    return memo(spark, sf_dir, "hudi_mor_fixture", build)
 
 
 @query(
@@ -12292,23 +12213,18 @@ def q_data_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Iceberg merge-on-read DELETE (r11): the other deletion strategy
 # ---------------------------------------------------------------------------
 
-_ICEBERG_DML_FIX: dict = {}
-
-
 def _iceberg_dml_fixture(spark, sf_dir: str) -> dict:
     """write_iceberg the documents slice in two appends, then
     ``delete_iceberg`` (doc_id % 7 = 3) — a positional-delete commit,
     no data-file rewrite."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ICEBERG_DML_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import iceberg as ib
 
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "lang"
         )
-        path = tempfile.mkdtemp(prefix="kmdb_ib_dml_") + "/docs_mor"
+        path = memo_dir(spark, "iceberg_dml_fixture", sf_dir) + "/docs_mor"
         ib.write_iceberg(docs.where(F.col("doc_id") % 2 == 0), path)
         s_pre = ib.write_iceberg(
             docs.where(F.col("doc_id") % 2 == 1), path
@@ -12326,14 +12242,15 @@ def _iceberg_dml_fixture(spark, sf_dir: str) -> dict:
             {"source": "upper(lang)"},
             "doc_id % 11 = 0",
         )
-        _ICEBERG_DML_FIX[key] = {
+        return {
             "path": path,
             "s_pre": s_pre,
             "s_del": s_del,
             "s_mrg": s_mrg,
             "s_upd": s_upd,
         }
-    return _ICEBERG_DML_FIX[key]
+
+    return memo(spark, sf_dir, "iceberg_dml_fixture", build)
 
 
 @query(
@@ -12420,18 +12337,13 @@ def q_iceberg_delete_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Delta data skipping (r11): add.stats written + file pruning on read
 # ---------------------------------------------------------------------------
 
-_DELTA_SKIP_FIX: dict = {}
-
-
 def _delta_skip_fixture(spark, sf_dir: str) -> str:
     """write_delta the documents slice partitioned by lang, with the
     rows RANGE-partitioned on doc_id inside each commit — so the
     per-file add.stats min/max ranges are disjoint and a doc_id
     predicate can prove most files dead."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DELTA_SKIP_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import deltalog as dl
 
         docs = (
@@ -12439,10 +12351,11 @@ def _delta_skip_fixture(spark, sf_dir: str) -> str:
             .select("doc_id", "source", "lang")
             .repartitionByRange(4, "doc_id")
         )
-        path = tempfile.mkdtemp(prefix="kmdb_delta_skip_") + "/docs_skip"
+        path = memo_dir(spark, "delta_skip_fixture", sf_dir) + "/docs_skip"
         dl.write_delta(docs, path, partition_columns=["lang"])
-        _DELTA_SKIP_FIX[key] = path
-    return _DELTA_SKIP_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "delta_skip_fixture", build)
 
 
 @query(
@@ -12488,17 +12401,12 @@ def q_delta_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Iceberg data skipping (r12): manifest bounds written + file pruning on read
 # ---------------------------------------------------------------------------
 
-_ICE_SKIP_FIX: dict = {}
-
-
 def _iceberg_skip_fixture(spark, sf_dir: str) -> str:
     """write_iceberg the documents slice with rows RANGE-partitioned
     on doc_id, so each data file's manifest lower/upper bounds are
     disjoint and a doc_id predicate can prove most files dead."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ICE_SKIP_FIX:
-        import tempfile
 
+    def build():
         from kissmetrics_to_database_spark.sources import iceberg as ib
 
         docs = (
@@ -12506,10 +12414,11 @@ def _iceberg_skip_fixture(spark, sf_dir: str) -> str:
             .select("doc_id", "source", "lang")
             .repartitionByRange(4, "doc_id")
         )
-        path = tempfile.mkdtemp(prefix="kmdb_ice_skip_") + "/docs_skip"
+        path = memo_dir(spark, "iceberg_skip_fixture", sf_dir) + "/docs_skip"
         ib.write_iceberg(docs, path)
-        _ICE_SKIP_FIX[key] = path
-    return _ICE_SKIP_FIX[key]
+        return path
+
+    return memo(spark, sf_dir, "iceberg_skip_fixture", build)
 
 
 @query(

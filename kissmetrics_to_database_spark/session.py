@@ -15,7 +15,12 @@ Configuration notes (scale-first):
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
+import shutil
+import tempfile
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,21 +94,90 @@ def get_spark(
     return spark
 
 
-# Warm-cache registry (see cache_tables). Keyed by the Spark
-# application id — stable for a session's lifetime and never reused
-# by a replacement session (unlike id(spark), which CPython can
-# recycle after GC — ADVICE r01 #4). _session_key also evicts entries
-# of stopped sessions so cached plans don't pin dead JVMs for process
-# lifetime.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# The one memo registry: every result reused across calls (cached
+# tables, shared sub-plans, trained artifacts, lakehouse fixtures).
+# Keyed by application id — unlike id(spark), which CPython can
+# recycle, never reused by a later session (ADVICE r01 #4) — plus
+# sf_dir, name and key. Each value is stored with the signature of the
+# sf_dir data it was built from.
+_MEMO: dict[tuple, tuple[tuple, object]] = {}
+_MEMO_COUNTS: Counter[tuple[str, str]] = Counter()
 
 
-def _session_key(spark: SparkSession) -> str:
+def _memo_entry(
+    spark: SparkSession, sf_dir: str, name: str, key: tuple
+) -> tuple[tuple, tuple, tuple | None]:
+    """The registry key, the data signature of ``sf_dir`` and the
+    stored (signature, value) if built from that data. Evicts other
+    (stopped) sessions' entries, so cached plans don't pin dead JVMs. A
+    stale entry is dropped and a persisted frame in it released: Spark's
+    cache matches plans, not file contents."""
     app_id = spark.sparkContext.applicationId
-    stale = [k for k in _TABLE_CACHE if k[0] != app_id]
-    for k in stale:
-        _TABLE_CACHE.pop(k, None)
-    return app_id
+    for other in [k for k in _MEMO if k[0] != app_id]:
+        del _MEMO[other]
+    k = (app_id, sf_dir, name, key)
+    sig = _data_signature(sf_dir)
+    entry = _MEMO.get(k)
+    if entry is not None and entry[0] != sig:
+        del _MEMO[k]
+        if isinstance(entry[1], DataFrame):
+            entry[1].unpersist()
+        entry = None
+    return k, sig, entry
+
+
+def _data_signature(sf_dir: str) -> tuple:
+    """(name, st_mtime_ns, st_size) of each ``*.parquet`` directly under
+    ``sf_dir`` — about 25 µs for the ten testdata tables on a 4-core
+    Xeon. Empty when ``sf_dir`` is not a directory."""
+    try:
+        with os.scandir(sf_dir) as entries:
+            stats = [
+                (e.name, e.stat())
+                for e in entries
+                if e.name.endswith(".parquet")
+            ]
+    except OSError:
+        return ()
+    return tuple(sorted((n, st.st_mtime_ns, st.st_size) for n, st in stats))
+
+
+def memo(spark: SparkSession, sf_dir: str, name: str, build, *key):
+    """``build()``, run once per (session, sf_dir data, name, key) and
+    served from the registry afterwards. The value keeps whatever
+    storage ``build`` gave it (a persisted frame, a parquet path, a
+    driver-side list). Counts a hit or a miss under ``name``."""
+    k, sig, entry = _memo_entry(spark, sf_dir, name, key)
+    if entry is not None:
+        _MEMO_COUNTS[name, "hits"] += 1
+        return entry[1]
+    _MEMO_COUNTS[name, "misses"] += 1
+    value = build()
+    _MEMO[k] = (sig, value)
+    return value
+
+
+def memo_counts() -> dict[str, dict[str, int]]:
+    """Registry hits and misses per entry name, since process start."""
+    out: dict[str, dict[str, int]] = {}
+    for (name, kind), n in _MEMO_COUNTS.items():
+        out.setdefault(name, {"hits": 0, "misses": 0})[kind] = n
+    return out
+
+
+def memo_dir(spark: SparkSession, name: str, *key) -> str:
+    """An empty directory for a memo entry's on-disk value, under
+    ``<tmpdir>/kmdb_artifacts/<applicationId>/`` so concurrent sessions
+    can't cross-read. Whatever an earlier build of the same (name,
+    key) left there is removed first."""
+    app_id = spark.sparkContext.applicationId
+    h = hashlib.md5(repr((name, key)).encode()).hexdigest()[:16]
+    path = os.path.join(
+        tempfile.gettempdir(), "kmdb_artifacts", app_id, f"{name}_{h}"
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
 
 
 def cache_tables(
@@ -147,21 +221,22 @@ def cache_tables(
     bench run and larger SFs scale automatically.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    app_id = _session_key(spark)
-    total_rows = 0
-    for t in tables:
-        key = (app_id, sf_dir, t)
-        if key in _TABLE_CACHE:
-            continue
+    built_rows: list[int] = []
+
+    def build(t: str) -> DataFrame:
         df = load_table(spark, sf_dir, t)
         n = df.count()
-        total_rows += n
+        built_rows.append(n)
         parts = min(cpus, max(1, -(-n // rows_per_partition)))
         if parts > 1:
             df = df.repartition(parts)
         df = df.persist()
         df.count()
-        _TABLE_CACHE[key] = df
+        return df
+
+    for t in tables:
+        memo(spark, sf_dir, "table", functools.partial(build, t), t)
+    total_rows = sum(built_rows)
     if total_rows:
         # Scale-adaptive shuffle width (r14, guide §2.2/§5): under AQE
         # every exchange PLANS this many partitions and coalesces down
@@ -189,7 +264,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-generated parquet table (TESTDATA.md).
 
     Serves from the warm cache when :func:`cache_tables` has been
-    called for this (session, sf_dir) — otherwise a cold read.
+    called for this (session, sf_dir data) — otherwise a cold read.
 
     SIDE EFFECT (ADVICE r3): every call — cache hit or cold —
     re-pins ``spark.sql.session.timeZone`` to UTC on the caller's
@@ -206,17 +281,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     sees. Footer inspection is driver-side pyarrow (cheap, metadata
     only).
     """
-    if _TABLE_CACHE:  # skip the JVM applicationId call on the cold path
-        cached = _TABLE_CACHE.get((_session_key(spark), sf_dir, name))
-        if cached is not None:
-            # The cached plan was built under pinned confs, but result
-            # FORMATTING still reads the live session timezone — a
-            # hostile session flipping spark.sql.session.timeZone after
-            # cache_tables() would render cached-table timestamps in
-            # its own tz (ADVICE r02). Re-pin on every serve; a conf
-            # set is driver-side and cheap.
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            return cached
+    _, _, cached = _memo_entry(spark, sf_dir, "table", (name,))
+    if cached is not None:
+        # The cached plan was built under pinned confs, but result
+        # FORMATTING still reads the live session timezone — a hostile
+        # session flipping spark.sql.session.timeZone after
+        # cache_tables() would render cached-table timestamps in its
+        # own tz (ADVICE r02). Re-pin on every serve; a conf set is
+        # driver-side and cheap.
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        return cached[1]
     path = os.path.join(sf_dir, f"{name}.parquet")
     # Defensive: queries may run under a caller-provided session
     # (the driver's). Pin the two confs correctness depends on —

@@ -1366,13 +1366,19 @@ def _next_instant_after(path: str) -> str:
     return f"{mx + 1:017d}"
 
 
+class HudiCommitConflict(RuntimeError):
+    """Another writer completed this instant first (the lost side of
+    an optimistic-concurrency race). Retryable at the next instant."""
+
+
 def _publish_instant(
     path: str, instant: str, action: str, metadata: dict
 ) -> None:
     """requested → inflight → completed, the completed file landing
     PUT-IF-ABSENT (hard link) — two writers racing on the same
-    instant cannot clobber each other; the loser retries at the next
-    instant (the caller's loop)."""
+    instant cannot clobber each other; the loser gets
+    :class:`HudiCommitConflict` and retries at the next instant (the
+    caller's loop)."""
     import uuid
 
     meta = os.path.join(path, ".hoodie")
@@ -1390,7 +1396,7 @@ def _publish_instant(
     try:
         os.link(tmp, final)
     except FileExistsError:
-        raise RuntimeError(
+        raise HudiCommitConflict(
             f"instant {instant} already completed — lost the "
             "optimistic-commit race"
         ) from None
@@ -1495,10 +1501,8 @@ def write_hudi(
                         else "commit"
                     ),
                 )
-            except RuntimeError as e:
-                if "lost the optimistic-commit race" in str(e):
-                    continue
-                raise
+            except HudiCommitConflict:
+                continue
         raise RuntimeError(f"lost 10 commit races under {path}")
 
 
@@ -1718,10 +1722,8 @@ def upsert_hudi(
                     n_buckets,
                     instant,
                 )
-            except RuntimeError as e:
-                if "lost the optimistic-commit race" in str(e):
-                    continue
-                raise
+            except HudiCommitConflict:
+                continue
         raise RuntimeError(f"lost 10 commit races under {path}")
 
 
@@ -2207,7 +2209,7 @@ def delete_hudi(
                 )
                 rows.unpersist()
                 return instant
-            except RuntimeError:
+            except HudiCommitConflict:
                 for stats in p2s.values():
                     for st in stats:
                         try:

@@ -7,13 +7,16 @@ from __future__ import annotations
 import json
 import os
 import sys
+from collections import Counter
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import bench  # noqa: E402
+from kissmetrics_to_database_spark import session  # noqa: E402
 
 
 def _emit_to_pipe(obj):
@@ -78,6 +81,7 @@ def test_failed_query_has_no_steady_time():
     assert out["value_steady"] == out["queries_steady"]["ok"]
     assert out["value"] == round(sum(out["queries"].values()), 3)
     assert out["errors"] == {"bad": "RuntimeError: boom"}
+    assert out["memo"]["bad"]["steady"] is None
     # null survives the stdout contract's JSON round-trip check
     r, w = os.pipe()
     try:
@@ -92,3 +96,33 @@ def test_all_ok_run_has_no_errors_field():
     out = bench.time_queries(["a"], lambda name: None)
     assert "errors" not in out
     assert out["value_steady"] == out["queries_steady"]["a"]
+
+
+def test_memo_field_flags_memo_backed_queries(monkeypatch):
+    """``memo`` reports each query's registry hits and misses for the
+    first call and the steady reruns; steady hits mean the steady
+    time serves a memoized result."""
+    monkeypatch.setattr(session, "_MEMO", {})
+    monkeypatch.setattr(session, "_MEMO_COUNTS", Counter())
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="app-bench")
+    )
+
+    def run(name):
+        if name == "memoized":
+            session.memo(spark, "no-such-sf-dir", "artifact", lambda: 1)
+
+    out = bench.time_queries(["memoized", "plain"], run)
+    assert out["memo"] == {
+        "memoized": {
+            "first": {"hits": 0, "misses": 1},
+            "steady": {"hits": 3, "misses": 0},
+            "memo_backed": True,
+        },
+        "plain": {
+            "first": {"hits": 0, "misses": 0},
+            "steady": {"hits": 0, "misses": 0},
+            "memo_backed": False,
+        },
+    }
+    assert json.loads(json.dumps(out)) == out

@@ -901,3 +901,20 @@ def test_write_hudi_commit_race_put_if_absent(spark, tmp_path):
     assert sorted(
         r["id"] for r in hudi.read_hudi(spark, path).collect()
     ) == [1, 2]
+
+
+def test_lost_publish_race_raises_hudi_commit_conflict(tmp_path):
+    """Publishing an instant another writer already completed raises
+    the typed conflict the retry loops catch, and leaves the winner's
+    metadata and no temp file behind."""
+    meta = tmp_path / ".hoodie"
+    meta.mkdir()
+    hudi._publish_instant(str(tmp_path), "00000000000000001", "commit",
+                          {"winner": True})
+    with pytest.raises(hudi.HudiCommitConflict, match="already completed"):
+        hudi._publish_instant(str(tmp_path), "00000000000000001",
+                              "commit", {"winner": False})
+    assert issubclass(hudi.HudiCommitConflict, RuntimeError)
+    done = json.loads((meta / "00000000000000001.commit").read_text())
+    assert done == {"winner": True}
+    assert [f for f in os.listdir(meta) if f.endswith(".tmp")] == []
