@@ -11371,8 +11371,8 @@ def q_iceberg_writer_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """WRITE Iceberg, then read it back (r11): with write_delta (r11)
-    and tablelog (r8) this completes transactional WRITE support for
-    all three table formats the engine reads — pipelines can land
+    and write_hudi (r12) the engine transactionally WRITES every table
+    format it reads — pipelines can land
     output other engines tail. The reader is the same ``read_iceberg``
     every foreign table goes through; the oracle is the straight
     aggregate over the source table, so any writer bug (lost file,

@@ -68,6 +68,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kissmetrics_to_database_spark.sources import commit
+
 _JSON_RE = re.compile(r"^(\d{20})\.json$")
 _CKPT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
 # checkpoint shapes this reader DOESN'T replay (r12, VERDICT r11 #6):
@@ -796,12 +798,11 @@ def write_delta(
 ) -> int:
     """Commit ``df`` to a Delta table at ``path`` — a PRODUCTION
     append path, unlike ``DeltaFixtureWriter`` (r11, VERDICT r10 #6:
-    the engine read three table formats but transactionally wrote
-    only its own tablelog; pipelines need output OTHER engines can
-    read and tail). Emits protocol-v1 commit bytes per delta.io
-    PROTOCOL.md: parquet part files written DISTRIBUTED by Spark
-    (staged under a per-commit segment, renamed into the table),
-    then one ``<version % 020d>.json`` with commitInfo + (at v0)
+    pipelines need output OTHER engines can read and tail). Emits
+    protocol-v1 commit bytes per delta.io PROTOCOL.md: parquet part
+    files written DISTRIBUTED by Spark (staged under a per-commit
+    segment, renamed into the table), then one
+    ``<version % 020d>.json`` with commitInfo + (at v0)
     protocol/metaData + one ``add`` per file, published
     PUT-IF-ABSENT (hard link; r12): losing a race with another
     writer re-replays the log, re-validates, and re-commits the
@@ -828,9 +829,8 @@ def write_delta(
     Exactly-once streaming: ``txn_app_id`` + ``epoch_id`` emit the
     protocol's SetTransaction (``txn``) action. A replayed epoch
     (≤ the table's recorded version for that appId) is recognized
-    during log replay and skipped — the same contract as
-    ``tablelog.write_table(epoch_id=...)``, expressed in Delta's own
-    idempotency primitive so foreign engines see it too. Returns the
+    during log replay and skipped — Delta's own idempotency
+    primitive, so foreign engines see it too. Returns the
     committed version (or the current version on a skipped replay).
 
     Scale shape: the data write is a normal distributed Spark write
@@ -860,7 +860,7 @@ def write_delta(
     # re-commit the already-staged files at the next version.
     with PipelineLock(os.path.join(log_dir, "_writer.lock")):
         adds: list[dict] | None = None
-        for _attempt in range(_MAX_COMMIT_RETRIES):
+        for _attempt in range(commit.MAX_ATTEMPTS):
             jsons, ckpts = _log_versions(log_dir)
             have = sorted(
                 set(jsons) | set(ckpts) | set(_alt_checkpoints(log_dir))
@@ -969,10 +969,10 @@ def write_delta(
             try:
                 _commit_json(log_dir, version, actions)
                 return version
-            except DeltaCommitConflict:
+            except commit.CommitConflict:
                 continue
-        raise DeltaCommitConflict(
-            f"lost {_MAX_COMMIT_RETRIES} commit races under {log_dir}"
+        raise commit.CommitConflict(
+            f"lost {commit.MAX_ATTEMPTS} commit races under {log_dir}"
         )
 
 
@@ -1592,12 +1592,10 @@ def checkpoint_delta(
         last_ckpt["checkpointType"] = "v2"
     else:
         raise ValueError(f"unknown checkpoint kind {kind!r}")
-    lc_tmp = os.path.join(log_dir, "_last_checkpoint.tmp")
-    with open(lc_tmp, "w", encoding="utf-8") as f:
-        json.dump(last_ckpt, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(lc_tmp, os.path.join(log_dir, "_last_checkpoint"))
+    commit.replace_atomically(
+        os.path.join(log_dir, "_last_checkpoint"),
+        json.dumps(last_ckpt).encode(),
+    )
     return v
 
 
@@ -1803,12 +1801,6 @@ def _stage_cdf_write(
     return actions
 
 
-class DeltaCommitConflict(RuntimeError):
-    """Another writer committed this version first (the lost side of
-    an optimistic-concurrency race). Retryable: re-replay the log,
-    re-validate, commit at the next version."""
-
-
 class DeltaConcurrentModification(RuntimeError):
     """A concurrent commit invalidated this transaction's read set
     (a file this commit removes is no longer live). NOT retryable
@@ -1816,38 +1808,16 @@ class DeltaConcurrentModification(RuntimeError):
     snapshot."""
 
 
-_MAX_COMMIT_RETRIES = 10
-
-
 def _commit_json(log_dir: str, version: int, actions: list[dict]) -> None:
-    """Publish one commit file with PUT-IF-ABSENT semantics (r12,
-    VERDICT r11 #4): the bytes are staged to a hidden tmp file
-    (fsync'd), then ``os.link``ed to the final name — hard-linking
-    fails atomically with EEXIST when the version file already
-    exists, unlike rename, which silently REPLACES on POSIX. Losing
-    the race raises ``DeltaCommitConflict`` so callers re-replay and
-    retry; two engines writing the same table can no longer clobber
-    each other's version files."""
-    import uuid
-
-    final = os.path.join(log_dir, f"{version:020d}.json")
-    tmp = os.path.join(
-        log_dir, f".{version:020d}.{uuid.uuid4().hex[:8]}.json.tmp"
+    """Publish one ``<version % 020d>.json`` commit file of JSON-lines
+    actions PUT-IF-ABSENT (r12, VERDICT r11 #4): losing the race raises
+    ``commit.CommitConflict`` so callers re-replay and retry; two
+    engines writing the same table cannot clobber each other's
+    version files."""
+    commit.publish_if_absent(
+        os.path.join(log_dir, f"{version:020d}.json"),
+        "".join(json.dumps(act) + "\n" for act in actions).encode(),
     )
-    with open(tmp, "w", encoding="utf-8") as f:
-        for act in actions:
-            f.write(json.dumps(act) + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise DeltaCommitConflict(
-            f"version {version} already committed under {log_dir} "
-            "— lost the optimistic-commit race"
-        ) from None
-    finally:
-        os.unlink(tmp)
 
 
 def _interleaved_adds(
@@ -1922,11 +1892,11 @@ def _commit_optimistic(
         if "remove" in a
     }
     v = int(version)
-    for _ in range(_MAX_COMMIT_RETRIES):
+    for _ in range(commit.MAX_ATTEMPTS):
         try:
             _commit_json(log_dir, v, actions)
             return v
-        except DeltaCommitConflict:
+        except commit.CommitConflict:
             state = snapshot_state(path)
             live = {
                 a["path"]: _dv_uid(a.get("deletionVector"))
@@ -1975,8 +1945,8 @@ def _commit_optimistic(
                         "re-run against the new snapshot"
                     ) from None
             v = state["version"] + 1
-    raise DeltaCommitConflict(
-        f"lost {_MAX_COMMIT_RETRIES} commit races under {log_dir}"
+    raise commit.CommitConflict(
+        f"lost {commit.MAX_ATTEMPTS} commit races under {log_dir}"
     )
 
 
@@ -2061,13 +2031,7 @@ def _dv_write_kernel_df(
             + data
             + struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)
         )
-        abs_fp = os.path.join(table_path, name)
-        tmp = abs_fp + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, abs_fp)
+        commit.replace_atomically(os.path.join(table_path, name), blob)
         return pd.DataFrame(
             [
                 [

@@ -73,6 +73,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kissmetrics_to_database_spark.sources import commit
+
 _COMPLETED_RE = re.compile(
     r"^(\d{14,17})\.(commit|deltacommit|replacecommit)$"
 )
@@ -1366,42 +1368,23 @@ def _next_instant_after(path: str) -> str:
     return f"{mx + 1:017d}"
 
 
-class HudiCommitConflict(RuntimeError):
-    """Another writer completed this instant first (the lost side of
-    an optimistic-concurrency race). Retryable at the next instant."""
-
-
 def _publish_instant(
     path: str, instant: str, action: str, metadata: dict
 ) -> None:
     """requested → inflight → completed, the completed file landing
-    PUT-IF-ABSENT (hard link) — two writers racing on the same
-    instant cannot clobber each other; the loser gets
-    :class:`HudiCommitConflict` and retries at the next instant (the
-    caller's loop)."""
-    import uuid
-
+    PUT-IF-ABSENT — two writers racing on the same instant cannot
+    clobber each other; the loser gets ``commit.CommitConflict`` and
+    retries at the next instant (the caller's loop)."""
     meta = os.path.join(path, ".hoodie")
     for suffix in (f".{action}.requested", f".{action}.inflight"):
         fp = os.path.join(meta, instant + suffix)
         if not os.path.exists(fp):
             with open(fp, "w"):
                 pass
-    final = os.path.join(meta, f"{instant}.{action}")
-    tmp = os.path.join(meta, f".{instant}.{uuid.uuid4().hex[:8]}.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(metadata, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise HudiCommitConflict(
-            f"instant {instant} already completed — lost the "
-            "optimistic-commit race"
-        ) from None
-    finally:
-        os.unlink(tmp)
+    commit.publish_if_absent(
+        os.path.join(meta, f"{instant}.{action}"),
+        json.dumps(metadata).encode(),
+    )
 
 
 def write_hudi(
@@ -1484,7 +1467,7 @@ def write_hudi(
                     "table already has data — use upsert_hudi "
                     "(bulk insert only initializes a table)"
                 )
-        for _attempt in range(10):
+        for _attempt in range(commit.MAX_ATTEMPTS):
             instant = _next_instant_after(path)
             try:
                 return _write_hudi_files(
@@ -1501,9 +1484,11 @@ def write_hudi(
                         else "commit"
                     ),
                 )
-            except HudiCommitConflict:
+            except commit.CommitConflict:
                 continue
-        raise RuntimeError(f"lost 10 commit races under {path}")
+        raise commit.CommitConflict(
+            f"lost {commit.MAX_ATTEMPTS} commit races under {path}"
+        )
 
 
 def _write_hudi_files(
@@ -1710,7 +1695,7 @@ def upsert_hudi(
         raise ValueError(f"source is missing key column {key_col!r}")
     once = _upsert_hudi_mor_once if mor else _upsert_hudi_once
     with PipelineLock(os.path.join(path, ".hoodie", "_writer.lock")):
-        for _attempt in range(10):
+        for _attempt in range(commit.MAX_ATTEMPTS):
             instant = _next_instant_after(path)
             try:
                 return once(
@@ -1722,9 +1707,11 @@ def upsert_hudi(
                     n_buckets,
                     instant,
                 )
-            except HudiCommitConflict:
+            except commit.CommitConflict:
                 continue
-        raise RuntimeError(f"lost 10 commit races under {path}")
+        raise commit.CommitConflict(
+            f"lost {commit.MAX_ATTEMPTS} commit races under {path}"
+        )
 
 
 def _upsert_hudi_once(
@@ -1937,12 +1924,7 @@ def _log_append_stats_df(
         rel = os.path.join(part, name) if part else name
         abs_fp = os.path.join(path, rel)
         os.makedirs(os.path.dirname(abs_fp) or path, exist_ok=True)
-        tmp = abs_fp + f".tmp-{token}"
-        with open(tmp, "wb") as f:
-            f.write(block)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, abs_fp)
+        commit.replace_atomically(abs_fp, block)
         return pd.DataFrame(
             [
                 [
@@ -2171,7 +2153,7 @@ def delete_hudi(
         import uuid as _uuid
 
         token = _uuid.uuid4().hex[:8]
-        for _attempt in range(10):
+        for _attempt in range(commit.MAX_ATTEMPTS):
             instant = _next_instant_after(path)
             # single pass (r14, guide §1.2): the kernel writes the
             # tombstone logs AND reports the affected groups — the
@@ -2209,7 +2191,7 @@ def delete_hudi(
                 )
                 rows.unpersist()
                 return instant
-            except HudiCommitConflict:
+            except commit.CommitConflict:
                 for stats in p2s.values():
                     for st in stats:
                         try:
@@ -2222,7 +2204,9 @@ def delete_hudi(
                 meta_all = _mor_slice_meta(path, slices)
                 continue
         rows.unpersist()
-        raise RuntimeError(f"lost 10 commit races under {path}")
+        raise commit.CommitConflict(
+            f"lost {commit.MAX_ATTEMPTS} commit races under {path}"
+        )
 
 
 def request_compaction_hudi(path: str) -> str:

@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kissmetrics_to_database_spark.functions import avroc
+from kissmetrics_to_database_spark.sources import commit
 from kissmetrics_to_database_spark.sources.deltalog import (
     _parse_conjuncts,
     _range_may_match,
@@ -720,15 +721,6 @@ def _manifest_stats(
     return out
 
 
-def _atomic_write(path: str, data: bytes) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as f:
-        f.write(data)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, path)
-
-
 def _murmur3_32(data: bytes, seed: int = 0) -> int:
     """murmur3_x86_32 (public algorithm; Iceberg spec Appendix B
     hashes with seed 0). Returns the UNSIGNED 32-bit result; bucket
@@ -1114,16 +1106,16 @@ def write_iceberg(
     partition_columns: list[str] | None = None,
 ) -> int:
     """Commit ``df`` to an Iceberg v2 table at ``path`` — the
-    PRODUCTION append path (r11), completing write support for all
-    three table formats (tablelog r8, Delta r11 write_delta). Emits
+    PRODUCTION append path (r11), alongside Delta's ``write_delta``
+    and Hudi's ``write_hudi``/``upsert_hudi``. Emits
     spec-shaped metadata per the Iceberg v2 spec: parquet data files
     written DISTRIBUTED by Spark (staged, renamed under ``data/``),
     then driver-side ONE new Avro manifest holding only this
     snapshot's ADDED entries — prior manifests are REUSED by
     reference in the new manifest list, the spec's append fast path,
     so commit metadata cost is O(new files), not O(table) — a new
-    manifest list, vN.metadata.json and version-hint.text, each
-    published tmp+fsync+rename under the single-writer lock.
+    manifest list, then vN.metadata.json published put-if-absent and
+    version-hint.text replaced atomically (``sources/commit``).
 
     Production shapes on purpose: ADDED entries carry NULL sequence
     numbers inherited from the manifest-list entry (the
@@ -1185,7 +1177,7 @@ def write_iceberg(
     # a fresh snapshot id, retry. Appends always win eventually.
     with PipelineLock(os.path.join(path, "metadata", "_writer.lock")):
         adds = None
-        for _attempt in range(_MAX_ICEBERG_RETRIES):
+        for _attempt in range(commit.MAX_ATTEMPTS):
             hint = os.path.join(path, "metadata", "version-hint.text")
             if os.path.exists(hint):
                 meta = table_metadata(path)
@@ -1492,7 +1484,7 @@ def write_iceberg(
             ]
             seg2 = uuid.uuid4().hex[:8]
             mf_rel = f"metadata/manifest-{sid}-{seg2}.avro"
-            _atomic_write(
+            commit.replace_atomically(
                 os.path.join(path, mf_rel),
                 avroc.write_container(manifest_schema, entries),
             )
@@ -1508,7 +1500,7 @@ def write_iceberg(
                 }
             ]
             mlist_rel = f"metadata/snap-{sid}-{seg2}.avro"
-            _atomic_write(
+            commit.replace_atomically(
                 os.path.join(path, mlist_rel),
                 avroc.write_container(_MANIFEST_LIST_SCHEMA, mlist),
             )
@@ -1561,16 +1553,11 @@ def write_iceberg(
             try:
                 _publish_metadata_version(path, new_meta, version + 1)
                 return sid
-            except IcebergCommitConflict:
+            except commit.CommitConflict:
                 continue
-        raise IcebergCommitConflict(
-            f"lost {_MAX_ICEBERG_RETRIES} commit races under {path}"
+        raise commit.CommitConflict(
+            f"lost {commit.MAX_ATTEMPTS} commit races under {path}"
         )
-
-
-class IcebergCommitConflict(RuntimeError):
-    """Another writer published this metadata version first — the
-    lost side of an optimistic race. Retryable after re-replay."""
 
 
 class IcebergConcurrentModification(RuntimeError):
@@ -1579,40 +1566,20 @@ class IcebergConcurrentModification(RuntimeError):
     by path+position). Re-run the DML against the new snapshot."""
 
 
-_MAX_ICEBERG_RETRIES = 10
-
-
 def _publish_metadata_version(
     path: str, new_meta: dict, version: int
 ) -> None:
-    """PUT-IF-ABSENT publish of vN.metadata.json (r12, the Delta
-    optimistic-commit recipe one format over): stage + fsync, then
-    hard-link to the version name — EEXIST means another writer won
-    and raises ``IcebergCommitConflict``. The version-hint update
-    after a win is advisory (``_latest_metadata`` takes the max of
-    hint and directory scan, so a stale hint can never roll the
-    table back)."""
-    import uuid
-
+    """PUT-IF-ABSENT publish of vN.metadata.json (r12): another
+    writer holding the version raises ``commit.CommitConflict``. The
+    version-hint update after a win is advisory (``_latest_metadata``
+    takes the max of hint and directory scan, so a stale hint can
+    never roll the table back)."""
     meta_dir = os.path.join(path, "metadata")
-    final = os.path.join(meta_dir, f"v{version}.metadata.json")
-    tmp = os.path.join(
-        meta_dir, f".v{version}.{uuid.uuid4().hex[:8]}.json.tmp"
+    commit.publish_if_absent(
+        os.path.join(meta_dir, f"v{version}.metadata.json"),
+        json.dumps(new_meta).encode(),
     )
-    with open(tmp, "wb") as f:
-        f.write(json.dumps(new_meta).encode())
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise IcebergCommitConflict(
-            f"metadata version {version} already published under "
-            f"{meta_dir} — lost the optimistic-commit race"
-        ) from None
-    finally:
-        os.unlink(tmp)
-    _atomic_write(
+    commit.replace_atomically(
         os.path.join(meta_dir, "version-hint.text"),
         str(version).encode(),
     )
@@ -1661,7 +1628,7 @@ def _commit_v2_snapshot(
     resurrect its pre-merge version as a fresh data file. Appends
     provably disjoint from the predicate still retry blindly."""
     import uuid as _uuid
-    for _attempt in range(_MAX_ICEBERG_RETRIES):
+    for _attempt in range(commit.MAX_ATTEMPTS):
         snaps = list(meta.get("snapshots") or [])
         sid_cur = meta.get("current-snapshot-id")
         prev_mlist: list[dict] = []
@@ -1716,7 +1683,7 @@ def _commit_v2_snapshot(
                 for rel, n, sz in files
             ]
             mf_rel = f"metadata/manifest-{sid}-{tag}-{seg}.avro"
-            _atomic_write(
+            commit.replace_atomically(
                 os.path.join(path, mf_rel),
                 avroc.write_container(_MANIFEST_SCHEMA, entries),
             )
@@ -1732,7 +1699,7 @@ def _commit_v2_snapshot(
                 }
             )
         mlist_rel = f"metadata/snap-{sid}-{seg}.avro"
-        _atomic_write(
+        commit.replace_atomically(
             os.path.join(path, mlist_rel),
             avroc.write_container(_MANIFEST_LIST_SCHEMA, mlist),
         )
@@ -1756,7 +1723,7 @@ def _commit_v2_snapshot(
         try:
             _publish_metadata_version(path, new_meta, version + 1)
             return sid
-        except IcebergCommitConflict:
+        except commit.CommitConflict:
             if replace_all:
                 # ANY concurrent commit invalidates a whole-table
                 # compaction — never silently drop its changes
@@ -1815,8 +1782,8 @@ def _commit_v2_snapshot(
                         "against the new snapshot"
                     ) from None
             continue
-    raise IcebergCommitConflict(
-        f"lost {_MAX_ICEBERG_RETRIES} commit races under {path}"
+    raise commit.CommitConflict(
+        f"lost {commit.MAX_ATTEMPTS} commit races under {path}"
     )
 
 

@@ -26,6 +26,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kissmetrics_to_database_spark.sources import commit
+
 _NUM_RE = re.compile(r"(\d+)")
 
 
@@ -68,9 +70,10 @@ class Watermark:
     def advance(self, filename: str) -> None:
         p = Path(self.path)
         p.parent.mkdir(parents=True, exist_ok=True)
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(json.dumps({"last_file": os.path.basename(filename)}))
-        tmp.replace(p)  # atomic on POSIX
+        commit.replace_atomically(
+            str(p),
+            json.dumps({"last_file": os.path.basename(filename)}).encode(),
+        )
 
     def rollback(self, filename: str | None) -> None:
         """Restore the session-start value (reference: rollback to the

@@ -862,26 +862,6 @@ def stream_domain_quota(
     )
 
 
-def tablelog_exactly_once_sink(
-    table_path: str, mode: str = "append"
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink committing each micro-batch into the
-    manifest-log table format (r8, `sources/tablelog`): the batch's
-    rows and its epoch-ledger entry become visible in ONE atomic
-    manifest rename, so a crash-replayed epoch is a no-op, a reset
-    checkpoint over a stale table raises, and concurrent readers keep
-    snapshot-consistent views throughout — the table-format upgrade
-    of the epoch-partitioned parquet lake append."""
-    from kissmetrics_to_database_spark.sources import tablelog
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        tablelog.write_table(
-            batch_df, table_path, mode=mode, epoch_id=int(epoch_id)
-        )
-
-    return sink
-
-
 def delta_exactly_once_sink(
     table_path: str,
     app_id: str,
@@ -892,8 +872,7 @@ def delta_exactly_once_sink(
     own SetTransaction action, so a crash-replayed epoch is an
     idempotent no-op AND foreign engines (or our ``CommitTailer``)
     see standard Delta exactly-once bytes. Streams land in a table
-    any Delta reader can tail — the lakehouse upgrade of
-    :func:`tablelog_exactly_once_sink`."""
+    any Delta reader can tail."""
     from kissmetrics_to_database_spark.sources import deltalog
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:

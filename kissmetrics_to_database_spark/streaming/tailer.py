@@ -1,6 +1,6 @@
-"""Lakehouse commit tailing (r10, VERDICT r9 #6): treat a Delta table
-or a manifest-log (tablelog) table as a STREAMING SOURCE — each new
-committed version becomes one micro-batch, epoch = commit version —
+"""Lakehouse commit tailing (r10, VERDICT r9 #6): treat a Delta,
+Iceberg or Hudi table as a STREAMING SOURCE — each new committed
+version becomes one micro-batch, epoch = commit version —
 composing the r9 lakehouse readers with the r7/r8 exactly-once epoch
 machinery. This is what a real ingest pipeline does with a lakehouse
 table: tail the transaction log, not the directory.
@@ -12,33 +12,26 @@ commit logs):
 - A persisted CURSOR file records the last fully-processed version.
   It advances ONLY after the sink returns — so delivery is
   at-least-once, and composing with an epoch-keyed idempotent sink
-  (``tablelog.write_table(..., epoch_id=version)`` or
+  (``pipeline.delta_exactly_once_sink``'s SetTransaction or
   ``pipeline.jdbc_exactly_once_sink``'s staged ledger) yields
   exactly-once end-to-end: a crash between sink and cursor advance
   replays the version, the sink's ledger recognizes the epoch, and
   the rows land once.
-- The cursor is written atomically (tmp + fsync + rename), the
-  tablelog manifest recipe, so a crash never leaves a torn cursor.
+- The cursor is written atomically (``commit.replace_atomically``:
+  tmp + fsync + rename), so a crash never leaves a torn cursor.
 - Restart = construct a new tailer over the same cursor path; it
   resumes from the recorded version.
 
 Incremental semantics per source:
 
-- **tablelog**: an ``append`` commit's batch is the manifest's file
-  list MINUS the previous manifest's (immutable segments make set
-  difference exact); ``compact`` commits rewrite bytes without
-  changing rows — skipped (cursor still advances); ``overwrite``
-  commits replace the table — the whole new file list is the batch
-  (a tailer consumer sees the replacement content once; document
-  downstream semantics yourself if you overwrite mid-stream).
 - **delta**: a commit's batch is its dataChange=true ``add`` actions
   (read straight from ``_delta_log/<v>.json`` — no snapshot replay
   needed for a tail). Commits whose removes are all
   ``dataChange: false`` are OPTIMIZE/compaction rewrites — skipped
-  with the cursor advancing, like tablelog ``compact`` commits (r11,
-  VERDICT r10 #1). Commits with ``cdc`` actions (Delta CDF) deliver
-  their ``_change_data`` files as row-level changes with the
-  ``_change_type`` column (r11, VERDICT r10 #5). Only a commit that
+  with the cursor advancing (r11, VERDICT r10 #1). Commits with
+  ``cdc`` actions (Delta CDF) deliver their ``_change_data`` files
+  as row-level changes with the ``_change_type`` column (r11,
+  VERDICT r10 #5). Only a commit that
   removes rows (dataChange=true) WITHOUT change data still raises
   ValueError — stated, not silently wrong. Partition columns are
   reconstructed from each action's partitionValues exactly as in
@@ -78,7 +71,7 @@ from pyspark.sql import types as T
 from kissmetrics_to_database_spark.functions.avroc import (
     read_container as avroc_read,
 )
-from kissmetrics_to_database_spark.sources import deltalog, iceberg, tablelog
+from kissmetrics_to_database_spark.sources import commit, deltalog, iceberg
 
 
 def _read_cursor(cursor_path: str) -> int:
@@ -91,12 +84,9 @@ def _read_cursor(cursor_path: str) -> int:
 
 def _advance_cursor(cursor_path: str, version: int) -> None:
     os.makedirs(os.path.dirname(cursor_path) or ".", exist_ok=True)
-    tmp = cursor_path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"version": int(version)}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, cursor_path)
+    commit.replace_atomically(
+        cursor_path, json.dumps({"version": int(version)}).encode()
+    )
 
 
 def _delta_commit_actions(path: str, version: int) -> list[dict]:
@@ -111,13 +101,13 @@ def _delta_commit_actions(path: str, version: int) -> list[dict]:
 
 
 class CommitTailer:
-    """Tail a lakehouse table's commit log. ``kind`` is 'tablelog' or
-    'delta'. ``poll(spark, sink)`` feeds each new version to
+    """Tail a lakehouse table's commit log. ``kind`` is 'delta',
+    'iceberg' or 'hudi'. ``poll(spark, sink)`` feeds each new version to
     ``sink(batch_df, version)`` in commit order, advancing the cursor
     after each sink return; returns the versions processed."""
 
     def __init__(self, kind: str, table_path: str, cursor_path: str):
-        if kind not in ("tablelog", "delta", "iceberg", "hudi"):
+        if kind not in ("delta", "iceberg", "hudi"):
             raise ValueError(f"unknown tailer kind {kind!r}")
         self.kind = kind
         self.table_path = table_path
@@ -128,8 +118,6 @@ class CommitTailer:
         return _read_cursor(self.cursor_path)
 
     def committed_versions(self) -> list[int]:
-        if self.kind == "tablelog":
-            return tablelog.list_versions(self.table_path)
         if self.kind == "iceberg":
             meta = iceberg.table_metadata(self.table_path)
             return sorted(
@@ -156,27 +144,6 @@ class CommitTailer:
 
     # -- incremental batch construction -------------------------------
 
-    def _tablelog_batch(
-        self, spark: SparkSession, version: int
-    ) -> DataFrame | None:
-        man = tablelog.read_manifest(self.table_path, version)
-        if man.get("mode") == "compact":
-            return None  # byte rewrite, no new rows
-        prev_files: set[str] = set()
-        if man.get("mode") == "append" and version > 0:
-            versions = tablelog.list_versions(self.table_path)
-            older = [v for v in versions if v < version]
-            if older:
-                prev_files = set(
-                    tablelog.read_manifest(self.table_path, older[-1])[
-                        "files"
-                    ]
-                )
-        new_files = [f for f in man["files"] if f not in prev_files]
-        if not new_files:
-            return None
-        return spark.read.option("mergeSchema", "true").parquet(*new_files)
-
     def _delta_batch(
         self, spark: SparkSession, version: int
     ) -> DataFrame | None:
@@ -199,8 +166,7 @@ class CommitTailer:
         }
         actions = _delta_commit_actions(self.table_path, version)
         # dataChange=false removes are OPTIMIZE/compaction rewrites —
-        # bytes move, rows don't; skip them exactly like the tablelog
-        # branch skips its `compact` commits (r11, VERDICT r10 #1: a
+        # bytes move, rows don't; skip them (r11, VERDICT r10 #1: a
         # routine OPTIMIZE on a tailed table must not kill the tail).
         # dataChange defaults to true per protocol when absent.
         real_removes = [
@@ -305,7 +271,7 @@ class CommitTailer:
         )
         # spec operation "replace" = files rewritten, table data
         # unchanged (compaction) — skip like Delta dataChange=false
-        # rewrites and tablelog `compact` commits (r11)
+        # rewrites (r11)
         if (snap.get("summary") or {}).get("operation") == "replace":
             return None
         mlist = iceberg._local(snap["manifest-list"], self.table_path)
@@ -404,8 +370,6 @@ class CommitTailer:
     def batch_for(
         self, spark: SparkSession, version: int
     ) -> DataFrame | None:
-        if self.kind == "tablelog":
-            return self._tablelog_batch(spark, version)
         if self.kind == "iceberg":
             return self._iceberg_batch(spark, version)
         if self.kind == "hudi":

@@ -9,7 +9,7 @@ import os
 import pandas as pd
 import pytest
 
-from kissmetrics_to_database_spark.sources import hudi
+from kissmetrics_to_database_spark.sources import commit, hudi
 
 
 def _pdf(ids, lang):
@@ -911,10 +911,12 @@ def test_lost_publish_race_raises_hudi_commit_conflict(tmp_path):
     meta.mkdir()
     hudi._publish_instant(str(tmp_path), "00000000000000001", "commit",
                           {"winner": True})
-    with pytest.raises(hudi.HudiCommitConflict, match="already completed"):
+    with pytest.raises(
+        commit.CommitConflict, match="lost the optimistic-commit race"
+    ):
         hudi._publish_instant(str(tmp_path), "00000000000000001",
                               "commit", {"winner": False})
-    assert issubclass(hudi.HudiCommitConflict, RuntimeError)
+    assert issubclass(commit.CommitConflict, RuntimeError)
     done = json.loads((meta / "00000000000000001.commit").read_text())
     assert done == {"winner": True}
     assert [f for f in os.listdir(meta) if f.endswith(".tmp")] == []

@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 
 from kissmetrics_to_database_spark.functions import avroc
+from kissmetrics_to_database_spark.sources import commit
 from kissmetrics_to_database_spark.sources import iceberg as ib
 
 FIELDS = [
@@ -919,7 +920,9 @@ def test_iceberg_publish_put_if_absent(spark, tmp_path):
     )
     ib.write_iceberg(mk([1]), path)
     meta = ib.table_metadata(path)
-    with pytest.raises(ib.IcebergCommitConflict, match="already published"):
+    with pytest.raises(
+        commit.CommitConflict, match="lost the optimistic-commit race"
+    ):
         ib._publish_metadata_version(path, meta, 1)
     # stale hint: point it back at v1 after a v2 commit lands
     ib.write_iceberg(mk([2]), path)
@@ -982,7 +985,7 @@ def test_delete_iceberg_conflict_and_retry(spark, tmp_path, monkeypatch):
             import kissmetrics_to_database_spark.functions.avroc as av
 
             mlist_rel = "metadata/snap-forged.avro"
-            ib._atomic_write(
+            commit.replace_atomically(
                 os.path.join(p, mlist_rel),
                 av.write_container(ib._MANIFEST_LIST_SCHEMA, []),
             )
@@ -1052,7 +1055,7 @@ def _forge_append(p, version, ids):
         }
     ]
     mf_rel = f"metadata/manifest-race-{sid}.avro"
-    ib._atomic_write(
+    commit.replace_atomically(
         os.path.join(p, mf_rel),
         av.write_container(ib._MANIFEST_SCHEMA, entries),
     )
@@ -1075,7 +1078,7 @@ def _forge_append(p, version, ids):
         }
     ]
     mlist_rel = f"metadata/snap-race-{sid}.avro"
-    ib._atomic_write(
+    commit.replace_atomically(
         os.path.join(p, mlist_rel),
         av.write_container(ib._MANIFEST_LIST_SCHEMA, mlist),
     )

@@ -9,7 +9,9 @@ import pytest
 from pyspark.sql import types as T
 
 from kissmetrics_to_database_spark.sources import deltalog as dl
-from kissmetrics_to_database_spark.sources import tablelog
+from kissmetrics_to_database_spark.streaming.pipeline import (
+    delta_exactly_once_sink,
+)
 from kissmetrics_to_database_spark.streaming.tailer import CommitTailer
 
 
@@ -18,73 +20,55 @@ def _df(spark, ids):
 
 
 def _dest_count(spark, dest):
-    return tablelog.read_table(spark, dest).count()
+    return dl.read_delta(spark, dest).count()
 
 
-def test_tablelog_tail_exactly_once_across_restarts(spark, tmp_path):
+def test_delta_tail_exactly_once_across_restarts(spark, tmp_path):
     src = str(tmp_path / "src")
     dest = str(tmp_path / "dest")
     cursor = str(tmp_path / "cursor.json")
-    tablelog.write_table(_df(spark, [1, 2]), src)  # v0
-    tablelog.write_table(_df(spark, [3]), src)  # v1
-    tablelog.write_table(_df(spark, [4, 5]), src)  # v2
+    dl.write_delta(_df(spark, [1, 2]), src)  # v0
+    dl.write_delta(_df(spark, [3]), src)  # v1
+    dl.write_delta(_df(spark, [4, 5]), src)  # v2
+    sink = delta_exactly_once_sink(dest, app_id="tail")
 
-    def sink(batch, version):
-        tablelog.write_table(batch, dest, epoch_id=version)
-
-    t = CommitTailer("tablelog", src, cursor)
+    t = CommitTailer("delta", src, cursor)
     assert t.pending() == [0, 1, 2]
     assert t.poll(spark, sink) == [0, 1, 2]
     assert _dest_count(spark, dest) == 5
     # nothing pending; a fresh tailer over the same cursor resumes
     assert t.poll(spark, sink) == []
-    t2 = CommitTailer("tablelog", src, cursor)
+    t2 = CommitTailer("delta", src, cursor)
     assert t2.pending() == []
     # a new commit is picked up by the restarted tailer, once
-    tablelog.write_table(_df(spark, [6]), src)  # v3
+    dl.write_delta(_df(spark, [6]), src)  # v3
     assert t2.poll(spark, sink) == [3]
     assert _dest_count(spark, dest) == 6
     assert t2.poll(spark, sink) == []
 
 
-def test_tablelog_tail_crash_replay_is_exactly_once(spark, tmp_path):
+def test_delta_tail_crash_replay_is_exactly_once(spark, tmp_path):
     src = str(tmp_path / "src")
     dest = str(tmp_path / "dest")
     cursor = str(tmp_path / "cursor.json")
-    tablelog.write_table(_df(spark, [1, 2, 3]), src)  # v0
+    dl.write_delta(_df(spark, [1, 2, 3]), src)  # v0
+    sink = delta_exactly_once_sink(dest, app_id="tail")
     calls = {"n": 0}
 
     def flaky_sink(batch, version):
-        tablelog.write_table(batch, dest, epoch_id=version)
+        sink(batch, version)
         if calls["n"] == 0:
             calls["n"] += 1
             raise RuntimeError("crash between sink and cursor advance")
 
-    t = CommitTailer("tablelog", src, cursor)
+    t = CommitTailer("delta", src, cursor)
     with pytest.raises(RuntimeError, match="crash"):
         t.poll(spark, flaky_sink)
-    # cursor untouched: the version replays; the dest epoch ledger
+    # cursor untouched: the version replays; the dest's SetTransaction
     # recognizes epoch 0 and skips — rows land exactly once
     assert t.position == -1 and t.pending() == [0]
     assert t.poll(spark, flaky_sink) == [0]
     assert _dest_count(spark, dest) == 3
-
-
-def test_tablelog_tail_skips_compaction_applies_overwrite(spark, tmp_path):
-    src = str(tmp_path / "src")
-    cursor = str(tmp_path / "cursor.json")
-    tablelog.write_table(_df(spark, [1, 2]), src)  # v0
-    tablelog.write_table(_df(spark, [3]), src)  # v1
-    tablelog.compact_table(spark, src)  # v2: byte rewrite, no new rows
-    tablelog.write_table(_df(spark, [9]), src, mode="overwrite")  # v3
-    seen = []
-
-    def sink(batch, version):
-        seen.append((version, sorted(r["id"] for r in batch.collect())))
-
-    t = CommitTailer("tablelog", src, cursor)
-    assert t.poll(spark, sink) == [0, 1, 2, 3]
-    assert seen == [(0, [1, 2]), (1, [3]), (3, [9])]  # v2 skipped
 
 
 def test_delta_tail_incremental_adds_and_remove_boundary(spark, tmp_path):
