@@ -22,17 +22,24 @@ from:
   parse (``json_repair``), filled by that same job. A batch with no
   good row is the one exception: its quarantined lines are counted by
   a scan of their own (see ``_run_locked``);
-- ``n_identity_members``: a count of the staged identity map.
+- ``n_identity_members``: an ``Observation`` on the one write of the
+  identity map (see :func:`publish_identity_map`).
+
+The identity map is written once, to a staging directory, and then
+published by rename: the window in which a crash can leave the map
+missing is two renames, not a whole Spark overwrite.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from kissmetrics_to_database_spark.functions import events_transform
 from kissmetrics_to_database_spark.operators import identity
@@ -66,6 +73,34 @@ def read_events_lake(spark: SparkSession, lake_dir: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(
         str(Path(lake_dir) / "events")
     )
+
+
+def publish_identity_map(comp: DataFrame, comp_path: str | Path) -> int:
+    """Write ``comp`` once to ``<comp_path>.staging``, then publish it
+    by rename; returns its row count.
+
+    The count is an ``Observation`` on that one write, so nothing reads
+    the map back. ``comp``'s lineage may read the current map (the
+    incremental fold does), and the write has finished reading it
+    before the swap: the old map moves to ``<comp_path>.old``, staging
+    moves to ``comp_path``, and ``.old`` is removed. A crash between
+    the two renames leaves the map under ``.old``; an ``.old`` left by
+    an earlier crash is removed before the first rename.
+    """
+    comp_path = Path(comp_path)
+    staging = comp_path.with_name(comp_path.name + ".staging")
+    old = comp_path.with_name(comp_path.name + ".old")
+    written = Observation("identity_map")
+    comp.observe(written, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(str(staging))
+    n_members = written.get["n"]
+    shutil.rmtree(old, ignore_errors=True)
+    if comp_path.exists():
+        os.rename(comp_path, old)
+    os.rename(staging, comp_path)
+    shutil.rmtree(old, ignore_errors=True)
+    return n_members
 
 
 def run_incremental(
@@ -151,13 +186,7 @@ def _run_locked(
                 comp = identity.update_components(existing, edges)
             else:
                 comp = identity.connected_components(edges)
-            # stage to a temp dir: comp's lineage may read comp_path
-            tmp = str(comp_path) + ".staging"
-            comp.write.mode("overwrite").parquet(tmp)
-            staged = spark.read.parquet(tmp)
-            n_members = staged.count()
-            staged.write.mode("overwrite").parquet(str(comp_path))
-            shutil.rmtree(tmp, ignore_errors=True)
+            n_members = publish_identity_map(comp, comp_path)
         wm.advance(files[-1])
     except Exception:
         wm.rollback(session_start)

@@ -121,10 +121,10 @@ def identity_lake_sink(lake_dir: str) -> Callable[[DataFrame, int], None]:
     exposed so the exactly-once replay contract is directly
     testable: epoch-partitioned idempotent event append + identity
     component fold."""
-    import shutil
     from pathlib import Path
 
     from kissmetrics_to_database_spark.operators import identity
+    from kissmetrics_to_database_spark.pipeline import publish_identity_map
 
     comp_path = str(Path(lake_dir) / "identity_components")
     events_path = str(Path(lake_dir) / "events")
@@ -149,14 +149,9 @@ def identity_lake_sink(lake_dir: str) -> Callable[[DataFrame, int], None]:
                 comp = identity.update_components(existing, edges)
             else:
                 comp = identity.connected_components(edges)
-            # stage to a temp dir first: comp's lineage reads the
-            # current comp_path, so overwriting it in place would be
-            # a read-under-write conflict
-            tmp = comp_path + f".epoch{epoch_id}"
-            comp.write.mode("overwrite").parquet(tmp)
-            final = batch_df.sparkSession.read.parquet(tmp)
-            final.write.mode("overwrite").parquet(comp_path)
-            shutil.rmtree(tmp, ignore_errors=True)
+            # comp's lineage reads the current map, so it is staged and
+            # published by rename rather than overwritten in place
+            publish_identity_map(comp, comp_path)
         finally:
             batch_df.unpersist()
 

@@ -71,6 +71,48 @@ def test_long_chain_converges(spark, local_threshold):
     assert set(got.values()) == {"n000"}
 
 
+@BOTH_PATHS
+def test_cc_raw_edge_inputs(spark, local_threshold):
+    # Duplicates, reversed pairs, a node on a self-loop only (absent
+    # from the output) and null endpoints, as string and as long ids.
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    edges = [
+        ("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"),
+        ("s", "s"), ("c", None), (None, "d"), (None, None),
+        ("x", "y"), ("y", "x"), ("x", "y"),
+    ]
+    ids = spark.range(40)
+    longs = (
+        ids.select(
+            F.when(ids.id == 7, None).otherwise(ids.id % 9).alias("src"),
+            (ids.id * 5 % 13 + 4).alias("dst"),
+        )
+        .union(ids.where(ids.id < 3).select((ids.id + 100).alias("src"), (ids.id + 100).alias("dst")))
+        .union(ids.where(ids.id < 5).select((ids.id * 5 % 13 + 4).alias("src"), (ids.id % 9).alias("dst")))
+    )
+    cases = [
+        (spark.createDataFrame(edges, "src string, dst string"), T.StringType(), {"s", "d"}),
+        (longs, T.LongType(), {100, 101, 102}),
+        # int src, long dst: both widen to long, as undirect_edges does
+        (longs.select(longs.src.cast("int").alias("src"), "dst"), T.LongType(), {100, 101, 102}),
+    ]
+    for df, node_type, absent in cases:
+        rows = [(r["src"], r["dst"]) for r in df.collect()]
+        clean = [(a, b) for a, b in rows if a is not None and b is not None and a != b]
+        stats: dict = {}
+        comp = identity.connected_components(
+            df, local_threshold=local_threshold, stats=stats
+        )
+        assert comp.schema["member"].dataType == node_type
+        assert comp.schema["component_id"].dataType == node_type
+        got = {r["member"]: r["component_id"] for r in comp.collect()}
+        assert got == _cc_python(clean)
+        assert absent.isdisjoint(got)
+        assert stats["path"] == ("local" if local_threshold else "distributed")
+
+
 def test_edge_order_invariance(spark):
     # components must not depend on input order (the reference's
     # incremental vs. global rebuild equivalence, KTD:359 vs 401)

@@ -218,6 +218,122 @@ def test_pipeline_counts_on_edge_batches(spark, tmp_path, lines, want, dedup):
     assert got == want
 
 
+def _write_batch(src, name, rows):
+    src.mkdir(exist_ok=True)
+    (src / name).write_text("\n".join(json.dumps(r) for r in rows))
+
+
+def _identity_map(spark, lake):
+    return {
+        r["member"]: r["component_id"]
+        for r in spark.read.parquet(str(lake / "identity_components")).collect()
+    }
+
+
+def test_identity_publish_failure_keeps_previous_map(spark, tmp_path, monkeypatch):
+    # A failure while the identity map is being written must leave the
+    # previous map in place and the watermark where it was; the retry
+    # then publishes the full closure and leaves no staging behind.
+    from pyspark.sql import functions as F
+
+    from tests.test_identity import _cc_python
+
+    src, state, lake = tmp_path / "src", tmp_path / "state", tmp_path / "lake"
+    _write_batch(src, "1.json", [{"_p": "u1", "_p2": "a1", "_n": "signup", "_t": "1704067207"}])
+    pipeline.run_incremental(spark, str(src), str(state), str(lake), fixed_date="2024-06-01")
+    map1 = _identity_map(spark, lake)
+    assert map1 == {"u1": "a1", "a1": "a1"}
+
+    _write_batch(src, "2.json", [{"_p": "u3", "_p2": "a1", "_n": "click", "_t": "1704067400"}])
+    real_update = pipeline.identity.update_components
+
+    def failing_update(existing, new_edges, *args, **kwargs):
+        comp = real_update(existing, new_edges, *args, **kwargs)
+        return comp.withColumn(
+            "component_id", F.raise_error(F.lit("injected identity failure"))
+        )
+
+    monkeypatch.setattr(pipeline.identity, "update_components", failing_update)
+    with pytest.raises(Exception, match="injected identity failure"):
+        pipeline.run_incremental(spark, str(src), str(state), str(lake), fixed_date="2024-06-01")
+    assert _identity_map(spark, lake) == map1
+    assert ndjson.Watermark(state / "watermark.json").read() == "1.json"
+
+    monkeypatch.undo()
+    res = pipeline.run_incremental(spark, str(src), str(state), str(lake), fixed_date="2024-06-01")
+    assert [f.split("/")[-1] for f in res.files] == ["2.json"]
+    assert _identity_map(spark, lake) == _cc_python([("u1", "a1"), ("u3", "a1")])
+    assert not (lake / "identity_components.staging").exists()
+    assert not (lake / "identity_components.old").exists()
+
+
+# Jobs one fresh run_incremental launches over _JOB_BATCH: 11 (3 for
+# schema inference, 3 for the materializing count, 1 lake write, 2 for
+# the edge probe, 1 edge collect, 1 map write). The earlier identity
+# step made it 17: it ran a distinct shuffle before the probe and the
+# collect, and wrote, read back, counted and rewrote the map.
+_MAX_PIPELINE_JOBS = 11
+
+_JOB_BATCH = [
+    ("1.json", [
+        {"_p": "u1", "_p2": "a1", "_n": "signup", "_t": "1704067207"},
+        {"_p": "u2", "_n": "view", "_t": "1704067300"},
+    ]),
+    ("2.json", [
+        {"_p": "u3", "_n": "updated email", "_t": "1704067400",
+         "new_email": "x@e.com", "previous_email": "u3@e.com"},
+        {"_p": "u2", "_p2": "a2", "_n": "alias", "_t": "1704067500"},
+    ]),
+    ("3.json", [
+        {"_p": "a2", "_p2": "u1", "_n": "alias", "_t": "1704067600"},
+        {"_p": "u4", "_n": "view", "_t": "1704067700"},
+    ]),
+]
+
+
+def test_pipeline_job_count(spark, tmp_path):
+    src = tmp_path / "src"
+    for name, rows in _JOB_BATCH:
+        _write_batch(src, name, rows)
+    sc = spark.sparkContext
+    group = f"pipeline-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "one run_incremental")
+    try:
+        res = pipeline.run_incremental(
+            spark, str(src), str(tmp_path / "state"), str(tmp_path / "lake"),
+            fixed_date="2024-06-01",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.n_rows == 6
+    assert res.n_identity_members == 7
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= _MAX_PIPELINE_JOBS, n_jobs
+
+
+def test_identity_members_equal_published_map_rows(spark, tmp_path):
+    src, state, lake = tmp_path / "src", tmp_path / "state", tmp_path / "lake"
+
+    def run():
+        return pipeline.run_incremental(
+            spark, str(src), str(state), str(lake), fixed_date="2024-06-01"
+        ).n_identity_members
+
+    def published_rows():
+        return spark.read.parquet(str(lake / "identity_components")).count()
+
+    _write_batch(src, "1.json", _JOB_BATCH[0][1])
+    assert run() == published_rows() == 2  # fresh load
+    _write_batch(src, "2.json", _JOB_BATCH[1][1])
+    assert run() == published_rows() == 7  # update load
+
+    # a batch with _p but no alias edge, into a fresh lake
+    src, state, lake = tmp_path / "src2", tmp_path / "state2", tmp_path / "lake2"
+    _write_batch(src, "1.json", [{"_p": "u9", "_n": "view", "_t": "1704067207"}])
+    assert run() == published_rows() == 0
+
+
 def test_union_evolving_and_align(spark):
     a = spark.createDataFrame([(1, "x")], ["id", "a"])
     b = spark.createDataFrame([(2, "y")], ["id", "b"])
